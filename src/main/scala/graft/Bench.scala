@@ -687,13 +687,10 @@ object Bench {
     // into `queries` (additions only — headline names/values unchanged),
     // drops the bulky diagnostics (they ride the full record above), and
     // prints AFTER spark.stop() so nothing trails it but sbt's own
-    // [success] line — comfortably inside the tail window. Mirrored to
-    // stderr in case only one stream is captured.
+    // [success] line — comfortably inside the tail window.
     val allQ = jsonMap(resultsAdj ++ writeResultsAdj ++ llmResultsAdj)
     val compact = f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_runs":$Runs,"failed":$failedJson,"readjudicated":$readjJson,"total_inflated":$totalInflated,"queries":$allQ,$hostCtx}"""
     println(compact)
     System.out.flush()
-    System.err.println(compact)
-    System.err.flush()
   }
 }

@@ -241,36 +241,53 @@ class GraftTable(
             "the column (or check its spelling)")
       }
 
-  /** Precombine (M1): among rows sharing a row IDENTITY keep the one with
-    * the max ordering value; on ties the delete tombstone wins (Hudi
-    * semantics). Identity matches the table's index scope — Hudi's
-    * HoodieKey: the record key alone under a global index, (partition,
-    * key) under a non-global one, where same-keyed rows in different
-    * partitions are distinct and must both survive a single batch. One
-    * hash-shuffle; max_by carries the whole row so there is no second
-    * join back. Without an ordering column, equal-key rows WITHIN one
-    * batch tie arbitrarily (the SQL multi-assignment rule); across
-    * commits the seq decides.
+  /** The latest-wins tie chain: (ordering, tombstone, commit seq), compared
+    * lexicographically. A row without the tombstone column (or with it
+    * NULL, as a union null-fills it for a batch that lacks it) ties as
+    * "not deleted". `commitSeq` is the stamp assumed for rows that carry
+    * none — this commit's seq on a write, 0 on a read; None leaves the
+    * limb out (one batch has no commit order within it).
     */
-  def precombine(batch: DataFrame): DataFrame = {
-    val cols = batch.columns
-    val tieBreak = struct(
-      orderingCol(cols.toSeq),
-      if (cols.contains(Meta.Deleted)) col(Meta.Deleted).cast("int") else lit(0))
+  private def tieOf(cols: Seq[String], commitSeq: Option[Long]): Column = {
+    val deleted =
+      if (cols.contains(Meta.Deleted)) coalesce(col(Meta.Deleted).cast("int"), lit(0))
+      else lit(0)
+    val stamp = commitSeq.map(s =>
+      if (cols.contains(Meta.CommitSeq)) coalesce(col(Meta.CommitSeq), lit(s)) else lit(s))
+    struct(Seq(orderingCol(cols), deleted) ++ stamp: _*)
+  }
+
+  /** THE latest-wins resolve, shared by precombine, the COW upsert and the
+    * MOR merged view: among rows sharing a row IDENTITY keep the one with
+    * the max [[tieOf]] tie (or fold columns, for a partial-update table).
+    * Identity matches the table's index scope — Hudi's HoodieKey: the
+    * record key alone under a global index, (partition, key) under a
+    * non-global one, where same-keyed rows in different partitions are
+    * distinct and must never collapse. One hash-shuffle; max_by carries the
+    * whole row so there is no second join back. Columns keep `df`'s order.
+    */
+  private def resolveLatest(df: DataFrame, commitSeq: Option[Long]): DataFrame = {
+    val cols = df.columns.toSeq
+    val tie = tieOf(cols, commitSeq)
     val identity: Seq[String] =
       if (!globalIndex && partitionFields.nonEmpty && partitionFields.forall(cols.contains))
         partitionFields :+ Meta.RecordKey
       else Seq(Meta.RecordKey)
-    if (partialUpdate)
-      return mergePartial(batch, identity, tieBreak)
-        .select((Meta.RecordKey +: cols.filterNot(_ == Meta.RecordKey))
-          .map(col).toIndexedSeq: _*)
-    batch
-      .groupBy(identity.map(col): _*)
-      .agg(max_by(struct(cols.map(col).toIndexedSeq: _*), tieBreak).as("_r"))
-      .select((Meta.RecordKey +: cols.filterNot(_ == Meta.RecordKey))
-        .map(c => col("_r." + c).as(c)).toIndexedSeq: _*)
+    if (partialUpdate) mergePartial(df, identity, tie)
+    else df.groupBy(identity.map(col): _*)
+      .agg(max_by(struct(cols.map(col): _*), tie).as("_r"))
+      .select(cols.map(c => col("_r." + c).as(c)): _*)
   }
+
+  /** Precombine (M1): the latest-wins resolve within one batch; on an
+    * ordering tie the delete tombstone wins (Hudi semantics). Without an
+    * ordering column, equal-key rows WITHIN one batch tie arbitrarily (the
+    * SQL multi-assignment rule); across commits the seq decides.
+    */
+  def precombine(batch: DataFrame): DataFrame =
+    resolveLatest(batch, commitSeq = None)
+      .select((Meta.RecordKey +: batch.columns.filterNot(_ == Meta.RecordKey))
+        .map(col).toIndexedSeq: _*)
 
   /** PARTIAL-UPDATE merge (Hudi's PartialUpdateAvroPayload / the
     * DMS-without-full-LOB CDC shape): a version carries values only for
@@ -1040,99 +1057,6 @@ class GraftTable(
     * lives in IntervalIndex, shared with the point-lookup read so the
     * sites cannot drift). Returns (affected, untouched).
     */
-  /** The upsert's small-batch gate: the precombined batch collected as
-    * wide-conformed driver rows when it is driver-sized (the mergeInto
-    * conversion's rows∧bytes gate) and carries no commit stamp — so the
-    * broadcast tie-break is provably strict (its commit-seq limb is this
-    * commit's seq, above every stored stamp). None keeps the distributed
-    * union+groupBy. Row cap conf-overridable (0 forces distributed — the
-    * law specs pin broadcast ≡ groupBy snapshots with it). */
-  private def smallUpsertBatch(batch: DataFrame,
-      wide: org.apache.spark.sql.types.StructType):
-      Option[(Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType)] = {
-    if (batch.columns.contains(Meta.CommitSeq)) return None
-    val cap = spark.conf.getOption(GraftTable.UpsertBroadcastCapKey)
-      .map(_.toLong).getOrElse(GraftTable.SmallMergeSourceRows)
-    if (cap <= 0) return None
-    if (batch.count() > cap) return None
-    val bytes = {
-      val fresh = batch.select(batch.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
-      val s = fresh.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (s.isValidLong) s.toLong else Long.MaxValue
-    }
-    if (bytes > GraftTable.SmallMergeSourceBytes) None
-    else {
-      val conformed = GraftTable.castTo(batch, wide)
-      Some((conformed.collect(), conformed.schema))
-    }
-  }
-
-  /** Latest-wins merge of a driver-collected batch into the affected
-    * snapshot WITHOUT exchanging the base: one broadcast LEFT join
-    * resolves matched keys by the union-world tie struct, and the
-    * not-matched batch rows are split off on the driver (matched keys
-    * from a key-column-pruned broadcast semi join). Output columns and
-    * values are exactly the union+groupBy(max_by) path's. */
-  private def broadcastUpsertMerge(ex: DataFrame,
-      bRows: Array[org.apache.spark.sql.Row],
-      bSchema: org.apache.spark.sql.types.StructType,
-      wide: org.apache.spark.sql.types.StructType, seq: Long): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val bDf = spark.createDataFrame(bRows.toSeq.asJava, bSchema)
-    val exCols = ex.columns.toSeq
-    val bCols = bSchema.fieldNames.toSeq
-    val outCols = exCols ++ bCols.filterNot(exCols.contains)
-    def dtOf(c: String) = wide(c).dataType
-    val bPref = bDf.select(bCols.map(c =>
-      if (c == Meta.RecordKey) col(c) else col(c).as(s"_b_$c")).toIndexedSeq: _*)
-      .withColumn("_bm", lit(true))
-    def bCol(c: String): Column =
-      if (c == Meta.RecordKey) col(c) else col(s"_b_$c")
-    // per-side tie structs: the union-world tieExpr evaluated against
-    // each side's own columns — a side missing a column contributes the
-    // same NULL/default the union's null-fill produced, so struct
-    // comparison (nulls-first field ordering, the max_by ordering)
-    // picks the identical winner
-    val eTie = struct(
-      if (exCols.contains(orderingField)) col(orderingField)
-      else lit(null).cast("string"),
-      if (exCols.contains(Meta.Deleted)) col(Meta.Deleted).cast("int") else lit(0),
-      if (exCols.contains(Meta.CommitSeq)) coalesce(col(Meta.CommitSeq), lit(seq))
-      else lit(seq))
-    val bTie = struct(
-      if (bCols.contains(orderingField)) bCol(orderingField)
-      else lit(null).cast("string"),
-      if (bCols.contains(Meta.Deleted)) bCol(Meta.Deleted).cast("int") else lit(0),
-      lit(seq)) // the gate excludes stamped batches
-    val bWins = col("_bm").isNotNull && (bTie > eTie)
-    val mergedEx = ex.join(broadcast(bPref), Seq(Meta.RecordKey), "left")
-      .select(outCols.map { c =>
-        if (c == Meta.RecordKey) col(c)
-        else {
-          val eV = if (exCols.contains(c)) col(c) else lit(null).cast(dtOf(c))
-          val bV = if (bCols.contains(c)) bCol(c) else lit(null).cast(dtOf(c))
-          when(bWins, bV).otherwise(eV).as(c)
-        }
-      }.toIndexedSeq: _*)
-    val matched = new java.util.HashSet[String]()
-    if (bRows.nonEmpty)
-      ex.join(broadcast(bDf.select(col(Meta.RecordKey))),
-          Seq(Meta.RecordKey), "left_semi")
-        .select(col(Meta.RecordKey)).collect()
-        .foreach(r => { matched.add(r.getString(0)); () })
-    val ki = bSchema.fieldIndex(Meta.RecordKey)
-    val ins = bRows.filter(r => r.isNullAt(ki) || !matched.contains(r.getString(ki)))
-    val insDf = spark.createDataFrame(ins.toSeq.asJava, bSchema)
-      .select(outCols.map { c =>
-        if (bCols.contains(c)) col(c) else lit(null).cast(dtOf(c)).as(c)
-      }.toIndexedSeq: _*)
-    mergedEx.unionByName(insDf)
-  }
-
-  /** Which merge shape the last [[upsert]] used — "broadcast" or
-    * "groupby" (spec observability only). */
-  @volatile private[graft] var lastUpsertMerge: String = ""
-
   private def pruneAffected(prev: Commit,
       batch: DataFrame): (Seq[DataFile], Seq[DataFile]) = {
     // record-level-index fast path: when a CURRENT index exists, it names
@@ -1325,14 +1249,6 @@ class GraftTable(
       else Some(scanFiles(affected, prevSchema))
 
     val seq = prev.seq + 1
-    // tie-break chain: (ordering, tombstone, commit seq) — on a full tie of
-    // (trx_seq, deleted) the LATER commit wins deterministically (incoming
-    // batch rows have no stamp yet → coalesce to this commit's seq)
-    val tieExpr: DataFrame => Column = df => struct(
-      orderingCol(df.columns.toSeq),
-      if (df.columns.contains(Meta.Deleted)) col(Meta.Deleted).cast("int") else lit(0),
-      if (df.columns.contains(Meta.CommitSeq)) coalesce(col(Meta.CommitSeq), lit(seq))
-      else lit(seq))
 
     // schema evolution may WIDEN a column's type (int→long, float→double,
     // Avro-resolution lattice): the union schema is computed against the
@@ -1343,46 +1259,11 @@ class GraftTable(
     val wide = GraftTable.widenSchemas(prevSchema, batch.schema)
     val merged = existing match {
       case None => GraftTable.castTo(batch, wide)
-      case Some(ex0) =>
-        val ex = GraftTable.castTo(ex0, wide)
-        // SMALL-BATCH BROADCAST MERGE (round-22, guide §2.4/§3.1): the
-        // union+groupBy below EXCHANGES every affected base row (plus a
-        // wide max_by(struct) aggregate) to resolve latest-wins against
-        // a batch that is usually KB-scale. When the precombined batch
-        // collects small (same rows∧bytes gate as the mergeInto
-        // conversion), resolve per-key winners with a broadcast LEFT
-        // join instead — the base is scanned, never exchanged — and add
-        // the not-matched batch rows driver-side (matched keys from one
-        // key-column-pruned semi-join pass). Winner per matched key is
-        // the SAME lexicographic tie struct the max_by used; a full tie
-        // is impossible here because the batch side is gated to carry
-        // no commit stamp (its third limb is this commit's seq, strictly
-        // above every stored stamp). Gated to the plain global-index
-        // path: partial-update and (partition,key)-identity tables keep
-        // the union+groupBy.
-        val bcEligible = !partialUpdate && (globalIndex || partitionFields.isEmpty)
-        (if (bcEligible) smallUpsertBatch(batch, wide) else None) match {
-          case Some((bRows, bSchema)) =>
-            lastUpsertMerge = "broadcast"
-            broadcastUpsertMerge(ex, bRows, bSchema, wide, seq)
-          case _ =>
-            lastUpsertMerge = "groupby"
-            val unioned = ex.unionByName(GraftTable.castTo(batch, wide),
-              allowMissingColumns = true)
-            val cols = unioned.columns
-            // non-global index: (partition, key) is the row identity —
-            // same-keyed rows in different partitions are distinct and
-            // must never collapse, even when pruning pulled both into
-            // the affected read
-            val identity: Seq[String] =
-              if (!globalIndex && partitionFields.nonEmpty) partitionFields :+ Meta.RecordKey
-              else Seq(Meta.RecordKey)
-            if (partialUpdate)
-              mergePartial(unioned, identity, tieExpr(unioned))
-            else unioned.groupBy(identity.map(col): _*)
-              .agg(max_by(struct(cols.map(col).toIndexedSeq: _*), tieExpr(unioned)).as("_r"))
-              .select(cols.map(c => col("_r." + c).as(c)).toIndexedSeq: _*)
-        }
+      case Some(ex) =>
+        // on a full tie of (ordering, tombstone) the LATER commit wins:
+        // incoming batch rows have no stamp yet, so they tie at this seq
+        resolveLatest(GraftTable.castTo(ex, wide).unionByName(
+          GraftTable.castTo(batch, wide), allowMissingColumns = true), Some(seq))
     }
     val live0 =
       if (merged.columns.contains(Meta.Deleted))
@@ -2152,24 +2033,8 @@ class GraftTable(
     val all = parts.reduce(_.unionByName(_, allowMissingColumns = true))
     if (c.logFiles.isEmpty) all
     else {
-      val cols = all.columns
-      val tie = struct(orderingCol(cols.toSeq),
-        if (cols.contains(Meta.Deleted)) col(Meta.Deleted).cast("int") else lit(0),
-        if (cols.contains(Meta.CommitSeq)) coalesce(col(Meta.CommitSeq), lit(0L)) else lit(0L))
-      // merge identity must MATCH the write side (doUpsert): with a
-      // non-global index a row's identity is (partition, key) — grouping
-      // by key alone would collapse legitimately distinct same-keyed rows
-      // living in different partitions
-      val identity: Seq[String] =
-        if (!globalIndex && partitionFields.nonEmpty)
-          partitionFields :+ Meta.RecordKey
-        else Seq(Meta.RecordKey)
-      val merged =
-        if (partialUpdate) mergePartial(all, identity, tie)
-        else all.groupBy(identity.map(col): _*)
-          .agg(max_by(struct(cols.map(col).toIndexedSeq: _*), tie).as("_r"))
-          .select(cols.map(c0 => col("_r." + c0).as(c0)).toIndexedSeq: _*)
-      if (cols.contains(Meta.Deleted))
+      val merged = resolveLatest(all, commitSeq = Some(0L))
+      if (all.columns.contains(Meta.Deleted))
         merged.filter(!coalesce(col(Meta.Deleted), lit(false)))
       else merged
     }
@@ -4018,11 +3883,6 @@ object GraftTable {
     * the conversion gate (rows AND bytes) — LocalRelation sources never
     * set it. Driver-side under the table lock; volatile is enough. */
   @volatile private[graft] var lastMergeSourceConverted = false
-
-  /** Row cap for the upsert small-batch broadcast merge (session conf;
-    * default [[SmallMergeSourceRows]], 0 disables — the law specs force
-    * the distributed path with it). */
-  val UpsertBroadcastCapKey = "graft.upsert.broadcastCap"
 
   /** Commit-store for a root, resolved exactly like the constructor
     * default: object-store CAS for mounted (space) roots, hard-link CAS

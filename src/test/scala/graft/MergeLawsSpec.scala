@@ -30,23 +30,28 @@ class MergeLawsSpec extends AnyFunSuite {
 
   /** The specification, Hudi-faithful: batches apply IN ORDER. Within a
     * batch, latest-wins on (seq, tombstone-flag); against existing state
-    * the same comparison — but a tombstoned key is physically REMOVED at
-    * commit, so a LATER batch carrying a lower-seq row resurrects it
-    * (SURVEY §7.4; the engine's documented semantics).
+    * the same comparison, where a full tie goes to the LATER batch (the
+    * tie chain's commit-seq limb) — but a tombstoned key is physically
+    * REMOVED at commit, so a LATER batch carrying a lower-seq row
+    * resurrects it (SURVEY §7.4; the engine's documented semantics).
+    * Each surviving key maps to its winning event and the index of the
+    * batch that supplied it.
     */
-  private def applyBatch(state: Map[Long, Ev], batch: List[Ev]): Map[Long, Ev] = {
-    val combined = batch.groupBy(_.id).map { case (id, vs) => id -> vs.maxBy(e => (e.seq, e.del)) }
-    combined.foldLeft(state) { case (st, (id, w)) =>
-      val winner = st.get(id) match {
-        case Some(ex) => if (Ordering[(Int, Boolean)].gt((w.seq, w.del), (ex.seq, ex.del))) w else ex
-        case None => w
+  private def reduceStamped(batches: List[List[Ev]]): Map[Long, (Ev, Int)] =
+    batches.zipWithIndex.foldLeft(Map.empty[Long, (Ev, Int)]) { case (st0, (batch, i)) =>
+      val combined = batch.groupBy(_.id).map { case (id, vs) => id -> vs.maxBy(e => (e.seq, e.del)) }
+      combined.foldLeft(st0) { case (st, (id, w)) =>
+        val winner = st.get(id) match {
+          case Some((ex, j)) if Ordering[(Int, Boolean)].gt((ex.seq, ex.del), (w.seq, w.del)) =>
+            (ex, j)
+          case _ => (w, i)
+        }
+        if (winner._1.del) st - id else st.updated(id, winner)
       }
-      if (winner.del) st - id else st.updated(id, winner)
     }
-  }
 
   private def reduceBatches(batches: List[List[Ev]]): Map[Long, String] =
-    batches.foldLeft(Map.empty[Long, Ev])(applyBatch).map { case (k, e) => k -> e.v }
+    reduceStamped(batches).map { case (k, (e, _)) => k -> e.v }
 
   private def toDf(evs: List[Ev]) =
     evs.map(e => (e.id, e.v, f"${e.seq}%03d", e.del))
@@ -56,52 +61,52 @@ class MergeLawsSpec extends AnyFunSuite {
     t.readUser().select("id", "v").as[(Long, String)].collect().toMap
 
   test("upsert over any split of any event stream equals the naive reduction") {
+    import org.apache.spark.sql.functions.{col, concat, lit}
     val rnd = new scala.util.Random(42)
     (1 to 12).foreach { trial =>
       val evs = genEvents(rnd)
       val root = Files.createTempDirectory("graft-law").toString
       val t = new GraftTable(spark, root, Seq("id"), targetFileBytes = 16 * 1024)
       val (a, b) = evs.splitAt(rnd.nextInt(evs.size + 1))
-      val expected = reduceBatches(List(a, b).filter(_.nonEmpty))
-      if (a.nonEmpty) t.upsert(toDf(a))
-      if (b.nonEmpty) t.upsert(toDf(b))
-      val got = snapshot(t)
-      assert(got == expected, s"trial $trial: events=$evs split=${a.size}")
+      // a last, schema-evolving batch adds a column the table lacks
+      // (carried rows read it as NULL)
+      val evolving = genEvents(rnd)
+      val batches = List(a, b, evolving).filter(_.nonEmpty)
+      val seqs = batches.map { bt =>
+        val df = toDf(bt)
+        t.upsert(if (bt eq evolving) df.withColumn("extra",
+          concat(lit("x"), col("id").cast("string"))) else df).seq
+      }
+      val expected = reduceStamped(batches).map { case (k, (e, i)) =>
+        k -> ((e.v, if (i == batches.size - 1) s"x$k" else "-", seqs(i)))
+      }
+      // every row carries the seq of the commit whose batch supplied it
+      val got = t.read().selectExpr("id", "v", "coalesce(extra, '-')",
+          s"`${Meta.CommitSeq}`")
+        .as[(Long, String, String, Long)].collect()
+        .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+      assert(got == expected, s"trial $trial: events=$evs split=${a.size} evolving=$evolving")
     }
   }
 
-  test("upsert law: small-batch broadcast merge equals the distributed union+groupBy") {
-    // round-22: a driver-sized batch resolves latest-wins through a
-    // broadcast LEFT join (no exchange of the affected base) — this law
-    // pins it byte-equal, rows AND commit stamps, to the distributed
-    // union+groupBy(max_by) over random event streams incl. deletes,
-    // late rows, and a schema-evolving second batch
-    def drive(forceDistributed: Boolean): Seq[(Long, String, String, Long)] = {
-      if (forceDistributed)
-        spark.conf.set(GraftTable.UpsertBroadcastCapKey, "0")
-      try {
-        val rnd = new scala.util.Random(1234)
-        val root = Files.createTempDirectory("graft-law-bc").toString
-        val t = new GraftTable(spark, root, Seq("id"), targetFileBytes = 16 * 1024)
-        t.bulkInsert(toDf(genEvents(rnd)))
-        t.upsert(toDf(genEvents(rnd)))
-        assert(t.lastUpsertMerge ==
-          (if (forceDistributed) "groupby" else "broadcast"),
-          s"wrong merge path under forceDistributed=$forceDistributed")
-        // evolving batch: a NEW column the base lacks (null-padded on
-        // carried rows in both paths)
-        t.upsert(toDf(genEvents(rnd)).withColumn("extra",
-          org.apache.spark.sql.functions.concat(
-            org.apache.spark.sql.functions.lit("x"),
-            org.apache.spark.sql.functions.col("id").cast("string"))))
-        t.read().selectExpr("id", "v", "coalesce(extra, '-') as extra",
-            s"`${Meta.CommitSeq}`")
-          .as[(Long, String, String, Long)].collect().sortBy(_._1).toSeq
-      } finally if (forceDistributed)
-        spark.conf.unset(GraftTable.UpsertBroadcastCapKey)
+  test("tombstone tie: a batch without the tombstone column ties as not deleted") {
+    // stored (1, old, 005) then (1, new, 005): an exact ordering tie, so
+    // the later commit wins whether or not the second batch carries the
+    // tombstone column (a union null-fills it for a batch that lacks it)
+    val stored = Seq((1L, "old", "005", false)).toDF("id", "v", "trx_seq", Meta.Deleted)
+    for {
+      tableType <- Seq(GraftTable.CopyOnWrite, GraftTable.MergeOnRead)
+      carries <- Seq(true, false)
+    } {
+      val t = new GraftTable(spark, Files.createTempDirectory("graft-law-tomb").toString,
+        Seq("id"), targetFileBytes = 16 * 1024, tableType = tableType)
+      t.upsert(stored)
+      val next = Seq((1L, "new", "005")).toDF("id", "v", "trx_seq")
+      t.upsert(if (carries) next.withColumn(Meta.Deleted,
+        org.apache.spark.sql.functions.lit(false)) else next)
+      assert(snapshot(t) == Map(1L -> "new"),
+        s"$tableType, batch carries the tombstone column: $carries")
     }
-    assert(drive(forceDistributed = false) == drive(forceDistributed = true),
-      "broadcast and distributed upsert merges must land identical state")
   }
 
   test("merge result is insensitive to row order within a batch and to COW/MOR path") {
