@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -405,12 +406,29 @@ class GraftTable(
     * commit's data dir and harvest per-file stats (key min/max, row count,
     * bytes) straight from the parquet footers — metadata-only, no second
     * scan of the data. Zero-row files are dropped and deleted.
+    *
+    * One task per file by default. A caller that knows the exact row count
+    * (`rows`) lets each task roll several files: a write task pays a fixed
+    * cost (deserialising the task binary's Hadoop conf, ~25 ms) that
+    * dominates a small file, so the task count is capped at what Spark
+    * would give a scan of the same bytes — `max(defaultParallelism,
+    * bytes / maxPartitionBytes)` — and each task rolls consecutive runs of
+    * its key-sorted rows at `maxRecordsPerFile`. Key intervals stay
+    * disjoint, but the file count can grow by up to `nTasks - 1` (each
+    * task rounds its share of files up), plus one sliver file per task
+    * loaded past the headroom. At production file sizes the cap is never
+    * reached and the write is one task per file.
     */
   private def writeFiles(df: DataFrame, seq: Long, estBytes: Long,
-      layoutSort: Seq[Column] = Seq.empty): Seq[DataFile] = {
+      layoutSort: Seq[Column] = Seq.empty, rows: Option[Long] = None): Seq[DataFile] = {
     val stage = s"$root/${dataDir(seq)}"
     val (df1, bytes, release) = guardWritePlan(df, estBytes)
     try {
+      val nFiles = numPartitionsFor(bytes)
+      val nTasks =
+        if (rows.isEmpty) nFiles
+        else GraftTable.writeTaskCount(nFiles, bytes, spark.sparkContext.defaultParallelism,
+          spark.sessionState.conf.filesMaxPartitionBytes)
       // BUCKET index layout: derive the bucket from the record key at
       // write time and emit it as a hive partition dir — partitionBy
       // strips the column from the data files, so it exists ONLY in
@@ -426,10 +444,15 @@ class GraftTable(
         if (layoutSort.nonEmpty) partCols.map(col) ++ layoutSort
         else (partCols :+ Meta.RecordKey).map(col)
       val writer0 = src
-        .repartitionByRange(numPartitionsFor(bytes), sortCols: _*)
+        .repartitionByRange(nTasks, sortCols: _*)
         .sortWithinPartitions(sortCols: _*)
         .write.mode("overwrite")
-      val writer = if (partCols.nonEmpty) writer0.partitionBy(partCols: _*) else writer0
+      val writer1 = rows match {
+        case Some(n) if nFiles > nTasks =>
+          writer0.option("maxRecordsPerFile", GraftTable.rolledFileRows(n, nTasks, nFiles))
+        case _ => writer0
+      }
+      val writer = if (partCols.nonEmpty) writer1.partitionBy(partCols: _*) else writer1
       writer.parquet(stage)
       val files = harvestStats(stage)
       if (keyBlooms || bloomColumns.nonEmpty) attachBlooms(stage, files) else files
@@ -1285,7 +1308,7 @@ class GraftTable(
       val prevRows = prev.files.map(_.numRows).sum
       val rowWidth =
         if (prevRows > 0) math.max(16L, prev.files.map(_.bytes).sum / prevRows) else 128L
-      val newFiles = writeFiles(persisted, seq, rows * rowWidth)
+      val newFiles = writeFiles(persisted, seq, rows * rowWidth, rows = Some(rows))
       // manifest schema = the widened UNION (+ any meta column live added):
       // never the batch's own schema — carried files keep their columns
       commitOrCleanStage(Commit(seq, "upsert", untouched ++ newFiles,
@@ -4094,7 +4117,10 @@ object GraftTable {
     // fromStatus with the already-known length: fromPath would re-stat the
     // file — 100k redundant metadata round-trips on the bulk-insert path
     val status = new org.apache.hadoop.fs.FileStatus(len, false, 1, 0, 0, p)
-    Using.resource(ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf))) { r =>
+    // read options from the caller's conf: open(InputFile) alone builds
+    // them from a fresh Configuration, ~12 ms per footer
+    Using.resource(ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf),
+        HadoopReadOptions.builder(conf, p).build())) { r =>
       r.getFooter.getBlocks.asScala.foreach { b =>
         rows += b.getRowCount
         blocks += 1
@@ -4438,6 +4464,28 @@ object GraftTable {
   /** Small-file count below which the INLINE clustering pass skips —
     * the fold-cadence knob (see the guard in `doCluster`). */
   val InlineFoldMinFiles: Int = 4
+  /** Write tasks for `nFiles` files of `bytes` in total: no more than a
+    * scan of those bytes would get (`max(parallelism, bytes /
+    * maxPartitionBytes)`), and never more than one per file. */
+  private def writeTaskCount(nFiles: Int, bytes: Long, parallelism: Int,
+      maxPartitionBytes: Long): Int = {
+    val scanTasks = bytes / maxPartitionBytes + (if (bytes % maxPartitionBytes > 0) 1 else 0)
+    math.min(nFiles.toLong, math.max(parallelism.toLong, scanTasks)).toInt
+  }
+
+  /** Slack over the even share of rows per rolled file: the range bounds
+    * are sampled, so tasks get unequal row counts, and without slack a
+    * task a few rows over its share would roll a sliver file. */
+  private val RollHeadroom: Double = 1.1
+
+  /** `maxRecordsPerFile` for `rows` rows written as `nFiles` files by
+    * `nTasks` tasks: the even share per file, plus [[RollHeadroom]]. */
+  private def rolledFileRows(rows: Long, nTasks: Int, nFiles: Int): Long = {
+    val perTask = (nFiles + nTasks - 1) / nTasks
+    val share = math.ceil(rows.toDouble / (nTasks.toLong * perTask).toDouble)
+    math.max(1L, math.ceil(share * RollHeadroom).toLong)
+  }
+
   /** Driver-side footer-harvest fan-out (bounded: metadata I/O, not CPU). */
   val HarvestParallelism: Int = 24
   /** Above this many files per write, footer harvest runs as a Spark job

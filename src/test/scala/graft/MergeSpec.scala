@@ -482,20 +482,38 @@ class MergeSpec extends AnyFunSuite {
     assert(files.forall(_.colBlooms.contains("u")),
       "column blooms must attach on partitioned tables too")
     // a partitioned bloom-pruned equality lookup stays exact
-    val probe = (777L * 2654435761L) % 50000L
-    val hit = t.readColumnEquals("u", probe)
-      .select($"id").as[Long].collect().toSet
-    assert(hit == (0L until 2000L).filter(i => (i * 2654435761L) % 50000L == probe).toSet)
+    def lookupIsExact(u: Long => Long): Unit = {
+      val probe = u(777L)
+      val hit = t.readColumnEquals("u", probe)
+        .select($"id").as[Long].collect().toSet
+      assert(hit.contains(777L) && hit == (0L until 2000L).filter(i => u(i) == probe).toSet)
+    }
+    lookupIsExact(i => (i * 2654435761L) % 50000L)
     // dynamic-partition writes reuse part-file basenames across partition
     // dirs; a basename match would cross-attach blooms and break the
     // no-false-negative guarantee — so probe EVERY file's own keys
-    files.foreach { f =>
+    def ownKeysInBloom(fs: Seq[graft.model.DataFile]): Unit = fs.foreach { f =>
       val keys = spark.read.parquet(s"$root/${f.path}")
         .select(Meta.RecordKey).as[String].collect()
       val (nh, bits) = KeyBloom.decode(f.keyBloom.get)
       keys.foreach(k => assert(KeyBloom.contains(bits, nh, KeyBloom.hash(k)),
         s"file ${f.path} does not contain its own key $k — bloom cross-attached"))
     }
+    ownKeysInBloom(files)
+    // an upsert over every file: its write tasks each roll several files
+    // (.c000, .c001, ...) per partition dir, and every rolled file gets
+    // its own blooms
+    val moved = (i: Long) => if (i % 7 == 0) (i * 2654435761L + 1) % 50000L
+      else (i * 2654435761L) % 50000L
+    t.upsert((0L until 2000L by 7L).map(i => (i, s"p${i % 3}", moved(i), "002"))
+      .toDF("id", "pt", "u", "trx_seq"))
+    val before = files.map(_.path).toSet
+    val rolled = t.latestCommit().get.files.filterNot(f => before(f.path))
+    assert(rolled.exists(_.path.contains(".c001.")), "the upsert wrote no rolled file")
+    assert(rolled.forall(f => f.keyBloom.isDefined && f.colBlooms.contains("u")),
+      "every rolled file needs its key bloom and its column bloom")
+    ownKeysInBloom(rolled)
+    lookupIsExact(moved)
     // and the bloom-pruned upsert path loses nothing
     t.upsert(Seq((3L, "p0", "002"), (4L, "p1", "002"), (5L, "p2", "002"))
       .toDF("id", "pt", "trx_seq"))
@@ -697,5 +715,92 @@ class MergeSpec extends AnyFunSuite {
     assert(t.readUser().filter($"id".isin(5L, 1500L, 5000L)).select("v").as[String]
       .collect().toSet == Set("u5", "u1500", "new"))
     assert(jobs.get <= 11, s"upsert ran ${jobs.get} Spark jobs, over its budget of 11")
+  }
+
+  test("a small-file COW upsert rolls several disjoint key-sorted files per write task") {
+    // a write task's fixed cost outweighs a small file's: the upsert caps
+    // its write tasks at what a scan of the same bytes would get and lets
+    // each task roll consecutive runs of its key-sorted rows
+    val sc = spark.sparkContext
+    val n = 2000L
+    val base = spark.range(0L, n).select(col("id"),
+      concat(lit("v"), col("id").cast("string")).as("v"),
+      lit("001").as("trx_seq"), lit(false).as(Meta.Deleted))
+    // every 40th key, spread over every file, plus two inserts
+    val batch = ((0L until n by 40L).map(i => (i, s"u$i", "002", false)) ++
+      Seq((n + 1, "new1", "002", false), (n + 2, "new2", "002", false)))
+      .toDF("id", "v", "trx_seq", Meta.Deleted)
+    // tasks of each stage that wrote output during `body`, via a listener
+    // scoped to a job group
+    def writeStageTasks(body: => Unit): Seq[Int] = {
+      val group = s"upsert-roll-${java.util.UUID.randomUUID()}"
+      val ours = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val written = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+            e.stageIds.foreach(ours.add)
+        override def onStageCompleted(
+            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+          val info = e.stageInfo
+          if (ours.contains(info.stageId) && info.taskMetrics != null &&
+              info.taskMetrics.outputMetrics.bytesWritten > 0)
+            written.add(info.numTasks)
+        }
+      }
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "upsert write tasks")
+      try body
+      finally {
+        sc.clearJobGroup()
+        org.apache.spark.TestListenerBus.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+      written.toArray.toSeq.map(_.asInstanceOf[Int])
+    }
+    val expected = (0L until n).map(i => i -> (if (i % 40 == 0) s"u$i" else s"v$i")).toMap ++
+      Map(n + 1 -> "new1", n + 2 -> "new2")
+    def snapshot(t: GraftTable) =
+      t.readUser().select("id", "v").as[(Long, String)].collect().toMap
+
+    val target = 8L * 1024
+    val t = new GraftTable(spark, tmp(), Seq("id"), targetFileBytes = target)
+    t.bulkInsert(base)
+    val prev = t.latestCommit().get
+    val stages = writeStageTasks(t.upsert(batch))
+    val c = t.latestCommit().get
+    val newFiles = c.files.filterNot(f => prev.files.exists(_.path == f.path))
+    assert(stages.size == 1, s"one stage writes the files, saw task counts $stages")
+    val tasks = stages.head
+    assert(tasks <= sc.defaultParallelism,
+      s"the write ran $tasks tasks for ${newFiles.size} small files")
+    assert(newFiles.size >= 4 && newFiles.size > tasks,
+      s"${newFiles.size} new files from $tasks tasks: nothing rolled")
+    // each rolled file is a consecutive run of its task's sorted keys
+    assert(newFiles.forall(f => f.minKey != null && f.maxKey != null))
+    val ivs = newFiles.map(f => (f.minKey, f.maxKey))
+      .sortWith((a, b) => GraftTable.cmpKey(a._1, b._1) < 0)
+    ivs.zip(ivs.drop(1)).foreach { case ((_, hi), (lo, _)) =>
+      assert(GraftTable.cmpKey(hi, lo) < 0, s"key intervals overlap: $hi >= $lo")
+    }
+    // no file holds more than the even share plus its 10% headroom; the
+    // file count is sized as before, from rows x the table's row width
+    val rows = newFiles.map(_.numRows).sum
+    val rowWidth = math.max(16L, prev.files.map(_.bytes).sum / prev.files.map(_.numRows).sum)
+    val nFiles = math.ceil((rows * rowWidth).toDouble / target).toInt
+    val perTask = (nFiles + tasks - 1) / tasks
+    val cap = math.ceil(math.ceil(rows.toDouble / (tasks * perTask)) * 1.1).toLong
+    assert(newFiles.forall(_.numRows <= cap),
+      s"a rolled file is over $cap rows: ${newFiles.map(_.numRows)}")
+    assert(snapshot(t) == expected)
+
+    // at the default 128 MB target nothing rolls: one task per file
+    val big = new GraftTable(spark, tmp(), Seq("id"))
+    big.bulkInsert(base)
+    val bigPrev = big.latestCommit().get.files.map(_.path).toSet
+    val bigStages = writeStageTasks(big.upsert(batch))
+    val bigNew = big.latestCommit().get.files.filterNot(f => bigPrev(f.path))
+    assert(bigStages == Seq(bigNew.size), s"task counts $bigStages for ${bigNew.size} files")
+    assert(snapshot(big) == expected)
   }
 }
