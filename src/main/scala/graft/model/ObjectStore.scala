@@ -174,7 +174,10 @@ class DirObjectStore(val root: Path) extends ObjectStore {
 
   def get(key: String): Option[Array[Byte]] = {
     val p = pathOf(key)
-    if (Files.isRegularFile(p)) Some(Files.readAllBytes(p)) else None
+    // a concurrent delete (a lease released, a marker cleared) can land
+    // between the check and the read: the key is then absent
+    try { if (Files.isRegularFile(p)) Some(Files.readAllBytes(p)) else None }
+    catch { case _: java.nio.file.NoSuchFileException => None }
   }
 
   def list(prefix: String): Seq[String] = walkList(prefix).map(_._1)

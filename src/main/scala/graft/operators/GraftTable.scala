@@ -286,9 +286,12 @@ class GraftTable(
     * SQL multi-assignment rule); across commits the seq decides.
     */
   def precombine(batch: DataFrame): DataFrame =
-    resolveLatest(batch, commitSeq = None)
-      .select((Meta.RecordKey +: batch.columns.filterNot(_ == Meta.RecordKey))
-        .map(col).toIndexedSeq: _*)
+    keyFirst(resolveLatest(batch, commitSeq = None))
+
+  /** `df` with the record key as its first column (the written layout). */
+  private def keyFirst(df: DataFrame): DataFrame =
+    df.select((Meta.RecordKey +: df.columns.filterNot(_ == Meta.RecordKey))
+      .map(col).toIndexedSeq: _*)
 
   /** PARTIAL-UPDATE merge (Hudi's PartialUpdateAvroPayload / the
     * DMS-without-full-LOB CDC shape): a version carries values only for
@@ -961,13 +964,23 @@ class GraftTable(
 
   /** M2 upsert: merge a CDC batch into the snapshot.
     *
-    * 1. precombine the batch (M1);
-    * 2. prune: broadcast the manifest's file intervals, semi-join against
-    *    batch keys → the affected-file set (driver sees only file paths);
-    * 3. read ONLY affected files, unionByName (schema evolution: new
-    *    columns null-padded), latest-wins on (ordering, deleted);
-    * 4. drop tombstones (M3), rewrite affected region, carry forward every
-    *    untouched file in the new manifest.
+    * 1. plan: broadcast the manifest's file intervals (and key blooms);
+    *    one exchange-free pass stabs every batch key and returns each
+    *    task's affected-file bitset, which also caches the raw batch;
+    * 2. resolve ONCE: read ONLY the affected files, unionByName the raw
+    *    batch (schema evolution: new columns null-padded) and keep the
+    *    latest row per key on (ordering, deleted, commit seq) — this one
+    *    pass is also the precombine (M1), as the tie is a lexicographic
+    *    max;
+    * 3. count the resolved rows exactly (one job, no aggregate exchange),
+    *    drop tombstones (M3), rewrite the affected region, carry forward
+    *    every untouched file in the new manifest.
+    *
+    * A COW upsert into a multi-file table runs 7 Spark jobs on the
+    * interval planner: the stab pass (1); the resolve's shuffle map
+    * stage, the fill of its cache and the count over it (3); the write's
+    * range sketch, range map stage and write (3). The bucket and RLI
+    * planners add their bounded distinct probes.
     *
     * A key deleted by a winning tombstone leaves the snapshot; a later
     * batch carrying a lower-seq version of that key re-inserts it (matches
@@ -1079,6 +1092,14 @@ class GraftTable(
     * UTF8String range partitioning both use (the stabbing walk itself
     * lives in IntervalIndex, shared with the point-lookup read so the
     * sites cannot drift). Returns (affected, untouched).
+    *
+    * The stab is ONE job over the batch's physical rows — no exchange, no
+    * `Row` conversion: each task ORs its keys' hits into a bitset over
+    * the numbered candidate files and returns it, and the driver ORs the
+    * bitsets. Driver bound: tasks × ceil(candidate files / 8) bytes. The
+    * broadcast index and blooms are destroyed once the bitsets are in.
+    * A NULL record key fails the pass loudly, as in the bucket and RLI
+    * probes.
     */
   private def pruneAffected(prev: Commit,
       batch: DataFrame): (Seq[DataFile], Seq[DataFile]) = {
@@ -1142,36 +1163,48 @@ class GraftTable(
           .map(r => partitionFields.indices.map(r.getString).mkString("/")).toSet
         grouped0.filter { case (p, _) => touched(p) }
       }
-    val index: Map[String, IntervalIndex] =
-      grouped.map { case (p, fs) =>
-        p -> IntervalIndex.build(fs.map(f => (f.minKey, f.maxKey, f.path)).toSeq)
-      }
-    val bcIvs = spark.sparkContext.broadcast(index)
-    val bcBlooms = spark.sparkContext.broadcast(
-      prev.files.iterator.flatMap(f =>
-        f.keyBloom.map(enc => f.path -> graft.functions.KeyBloom.decode(enc))).toMap)
-    val findFiles = udf { (part: String, k: String) =>
-      val cands = bcIvs.value.get(part).map(_.stab(k)).getOrElse(Seq.empty[String])
-      val blooms = bcBlooms.value
-      if (blooms.isEmpty) cands
-      else {
-        val h = graft.functions.KeyBloom.hash(k)
-        cands.filter { p =>
-          blooms.get(p) match {
-            case Some((nh, bits)) => graft.functions.KeyBloom.contains(bits, nh, h)
-            case None => true
-          }
+    // candidate files are numbered; the stab pass reports them by ordinal
+    val cands: Array[DataFile] = grouped.values.flatten.toArray
+    val hit = new java.util.BitSet(cands.length)
+    if (cands.nonEmpty) {
+      val ordinal = cands.iterator.map(_.path).zipWithIndex.toMap
+      val index: Map[String, IntervalIndex[Int]] =
+        grouped.map { case (p, fs) =>
+          p -> IntervalIndex.build(fs.toSeq.map(f => (f.minKey, f.maxKey, ordinal(f.path))))
         }
-      }
+      val blooms: Array[(Int, Array[Byte])] =
+        cands.map(_.keyBloom.map(graft.functions.KeyBloom.decode).orNull)
+      val bc = spark.sparkContext.broadcast((index, blooms))
+      val partCol =
+        if (partitioned)
+          concat_ws("/", partitionFields.map(f =>
+            coalesce(col(f).cast("string"), lit(GraftTable.NullPartition))): _*)
+        else lit("")
+      try {
+        batch.select(partCol, col(Meta.RecordKey)).queryExecution.toRdd
+          .mapPartitions { rows =>
+            val (ix, bl) = bc.value
+            val local = new java.util.BitSet(bl.length)
+            rows.foreach { r =>
+              require(!r.isNullAt(1),
+                "batch contains a NULL record key — record keys must be non-null")
+              val k = r.getUTF8String(1)
+              ix.get(r.getUTF8String(0).toString).foreach { iv =>
+                lazy val h = graft.functions.KeyBloom.hash(k)
+                iv.stab(k.toString).foreach { i =>
+                  val b = bl(i)
+                  if (b == null || graft.functions.KeyBloom.contains(b._2, b._1, h))
+                    local.set(i)
+                }
+              }
+            }
+            Iterator.single(local)
+          }
+          .collect().foreach(hit.or)
+      } finally bc.destroy()
     }
-    val partCol =
-      if (partitioned)
-        concat_ws("/", partitionFields.map(f =>
-          coalesce(col(f).cast("string"), lit(GraftTable.NullPartition))): _*)
-      else lit("")
-    val affectedPaths: Set[String] = batch
-      .select(explode(findFiles(partCol, col(Meta.RecordKey))).as("path"))
-      .distinct().collect().map(_.getString(0)).toSet ++ statless.map(_.path)
+    val affectedPaths: Set[String] =
+      statless.map(_.path).toSet ++ cands.indices.filter(hit.get).map(cands(_).path)
     val (affected, untouched) = candFiles.partition(f => affectedPaths(f.path))
     (affected, untouched ++ bucketSkipped)
   }
@@ -1258,69 +1291,68 @@ class GraftTable(
         } finally { pre.unpersist(blocking = false); () }
       }
     }
-    // persisted: the precombined batch feeds BOTH the pruning pass and the
-    // merge — without caching, the precombine shuffle would run twice
-    val batch = precombine(prepared(batch0))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val (affected, untouched) = pruneAffected(prev, batch)
-
-    val prevSchema = org.apache.spark.sql.types.DataType.fromJson(prev.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val existing =
-      if (affected.isEmpty) None
-      else Some(scanFiles(affected, prevSchema))
-
-    val seq = prev.seq + 1
-
-    // schema evolution may WIDEN a column's type (int→long, float→double,
-    // Avro-resolution lattice): the union schema is computed against the
-    // PREVIOUS MANIFEST schema even when no files are affected — an
-    // insert-only batch (all-new keys, affected = empty) still carries
-    // every prior file, so committing the batch's own schema would
-    // silently drop prior columns or narrow widened types for them
-    val wide = GraftTable.widenSchemas(prevSchema, batch.schema)
-    val merged = existing match {
-      case None => GraftTable.castTo(batch, wide)
-      case Some(ex) =>
-        // on a full tie of (ordering, tombstone) the LATER commit wins:
-        // incoming batch rows have no stamp yet, so they tie at this seq
-        resolveLatest(GraftTable.castTo(ex, wide).unionByName(
-          GraftTable.castTo(batch, wide), allowMissingColumns = true), Some(seq))
-    }
-    val live0 =
-      if (merged.columns.contains(Meta.Deleted))
-        merged.filter(!coalesce(col(Meta.Deleted), lit(false)))
-      else merged
-    val live = live0.withColumn(Meta.CommitSeq,
-      if (live0.columns.contains(Meta.CommitSeq))
-        coalesce(col(Meta.CommitSeq), lit(seq))
-      else lit(seq))
-
-    // repartitionByRange samples its child to compute range bounds, which
-    // would re-execute the whole merge; persist so merge runs once
-    val persisted = live.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // persisted: the planner and the resolve must see the same rows (the
+    // interval planner's stab pass is the batch's first job and fills it)
+    val batch = keyFirst(prepared(batch0))
     try {
-      // exact output size estimate: materialized row count × the table's
-      // observed compressed row width (plan stats on a multi-branch batch
-      // union wildly overestimate and would overshard the write)
-      val rows = persisted.count()
-      val prevRows = prev.files.map(_.numRows).sum
-      val rowWidth =
-        if (prevRows > 0) math.max(16L, prev.files.map(_.bytes).sum / prevRows) else 128L
-      val newFiles = writeFiles(persisted, seq, rows * rowWidth, rows = Some(rows))
-      // manifest schema = the widened UNION (+ any meta column live added):
-      // never the batch's own schema — carried files keep their columns
-      commitOrCleanStage(Commit(seq, "upsert", untouched ++ newFiles,
-        GraftTable.widenSchemas(wide, live.schema).json,
-        checkpoint, System.currentTimeMillis(),
-        extra = GraftTable.writeMetrics(newFiles) ++ extraMeta +
-          ("files_rewritten" -> affected.size.toString) +
-          ("files_carried" -> untouched.size.toString)), newFiles)
-    } finally {
-      persisted.unpersist(blocking = false)
-      batch.unpersist(blocking = false)
-    }
+      batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val (affected, untouched) = pruneAffected(prev, batch)
+
+      val prevSchema = org.apache.spark.sql.types.DataType.fromJson(prev.schemaJson)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      val seq = prev.seq + 1
+
+      // schema evolution may WIDEN a column's type (int→long, float→double,
+      // Avro-resolution lattice): the union schema is computed against the
+      // PREVIOUS MANIFEST schema even when no files are affected — an
+      // insert-only batch (all-new keys, affected = empty) still carries
+      // every prior file, so committing the batch's own schema would
+      // silently drop prior columns or narrow widened types for them
+      val wide = GraftTable.widenSchemas(prevSchema, batch.schema)
+      // ONE resolve over (affected files ∪ raw batch), no separate
+      // precombine: the tie (ordering, tombstone, coalesce(stamp, seq)) is
+      // a lexicographic max, so resolving the union at once equals
+      // precombining the batch and then merging it. Batch rows carry no
+      // stamp yet, so on a full (ordering, tombstone) tie with a stored
+      // row they win at this seq; a full tie inside the batch is arbitrary
+      val input =
+        if (affected.isEmpty) GraftTable.castTo(batch, wide)
+        else GraftTable.castTo(scanFiles(affected, prevSchema), wide).unionByName(
+          GraftTable.castTo(batch, wide), allowMissingColumns = true)
+      val merged = resolveLatest(input, Some(seq))
+      val live0 =
+        if (merged.columns.contains(Meta.Deleted))
+          merged.filter(!coalesce(col(Meta.Deleted), lit(false)))
+        else merged
+      val live = live0.withColumn(Meta.CommitSeq,
+        if (live0.columns.contains(Meta.CommitSeq))
+          coalesce(col(Meta.CommitSeq), lit(seq))
+        else lit(seq))
+
+      // repartitionByRange samples its child to compute range bounds, which
+      // would re-execute the whole merge; persist so merge runs once
+      val persisted = live.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // exact output size estimate: materialized row count × the table's
+        // observed compressed row width (plan stats on a multi-branch batch
+        // union wildly overestimate and would overshard the write). Counted
+        // over the physical rows: one job that also fills the cache, with
+        // no aggregate exchange of its own
+        val rows = persisted.queryExecution.toRdd.count()
+        val prevRows = prev.files.map(_.numRows).sum
+        val rowWidth =
+          if (prevRows > 0) math.max(16L, prev.files.map(_.bytes).sum / prevRows) else 128L
+        val newFiles = writeFiles(persisted, seq, rows * rowWidth, rows = Some(rows))
+        // manifest schema = the widened UNION (+ any meta column live added):
+        // never the batch's own schema — carried files keep their columns
+        commitOrCleanStage(Commit(seq, "upsert", untouched ++ newFiles,
+          GraftTable.widenSchemas(wide, live.schema).json,
+          checkpoint, System.currentTimeMillis(),
+          extra = GraftTable.writeMetrics(newFiles) ++ extraMeta +
+            ("files_rewritten" -> affected.size.toString) +
+            ("files_carried" -> untouched.size.toString)), newFiles)
+      } finally persisted.unpersist(blocking = false)
+    } finally { batch.unpersist(blocking = false); () }
   }
 
   /** T4 — MERGE_ON_READ delta commit: the deduped batch is appended as
@@ -3837,23 +3869,25 @@ class GraftTable(
   }
 }
 
-/** Sorted-interval stabbing index over (minKey, maxKey, path) triples —
+/** Sorted-interval stabbing index over (minKey, maxKey, file) triples —
   * the ONE implementation of "which files can contain key k" that the
-  * upsert planner (broadcast per partition, probed inside a UDF) and the
-  * point-lookup read share, so the two sites can never drift apart on
-  * pruning semantics. Rightmost-start binary search + running-max-end
-  * walk: O(log n + hits) per probe, unsigned-UTF-8 collation throughout.
+  * upsert planner (broadcast per partition, probed by its stab pass) and
+  * the point-lookup read share, so the two sites can never drift apart on
+  * pruning semantics. A file is whatever names it at the call site (a
+  * path, a candidate ordinal). Rightmost-start binary search + running-
+  * max-end walk: O(log n + hits) per probe, unsigned-UTF-8 collation
+  * throughout.
   */
-final class IntervalIndex private (
-    ivs: Array[(String, String, String)], maxEnd: Array[String]) extends Serializable {
-  def stab(k: String): Seq[String] = {
+final class IntervalIndex[F] private (
+    ivs: Array[(String, String, F)], maxEnd: Array[String]) extends Serializable {
+  def stab(k: String): Seq[F] = {
     var lo = 0; var hi = ivs.length - 1; var pos = -1
     while (lo <= hi) { // rightmost interval with minKey <= k
       val mid = (lo + hi) >>> 1
       if (GraftTable.cmpKey(ivs(mid)._1, k) <= 0) { pos = mid; lo = mid + 1 }
       else hi = mid - 1
     }
-    val out = Seq.newBuilder[String]
+    val out = Seq.newBuilder[F]
     var i = pos
     while (i >= 0 && GraftTable.cmpKey(maxEnd(i), k) >= 0) {
       if (GraftTable.cmpKey(ivs(i)._2, k) >= 0) out += ivs(i)._3
@@ -3864,7 +3898,7 @@ final class IntervalIndex private (
 }
 
 object IntervalIndex {
-  def build(intervals: Seq[(String, String, String)]): IntervalIndex = {
+  def build[F](intervals: Seq[(String, String, F)]): IntervalIndex[F] = {
     val ivs = intervals.toArray
       .sortWith((a, b) => GraftTable.cmpKey(a._1, b._1) < 0)
     val maxEnd = ivs.scanLeft("")((acc, iv) =>

@@ -134,12 +134,16 @@ class MergeLawsSpec extends AnyFunSuite {
 
   test("planner law: RLI-planned and interval-planned upserts reach identical snapshots") {
     // the planner picks WHICH files rewrite, never WHAT the merge means —
-    // for any event stream, a table with a maintained record-level index
-    // and one without must land on byte-identical user snapshots
+    // for any event stream, a table with a maintained record-level index,
+    // a bucketed table and a plain one must land on byte-identical user
+    // snapshots. The batches go in unprecombined, repeated keys and all:
+    // the one resolve over (affected files ∪ batch) is also the precombine
     val rnd = new scala.util.Random(4242)
+    var repeated = 0
     (1 to 6).foreach { trial =>
       val evs = genEvents(rnd)
       val (a, b) = evs.splitAt(rnd.nextInt(evs.size + 1))
+      if (List(a, b).exists(bt => bt.map(_.id).distinct.size < bt.size)) repeated += 1
 
       val interval = new GraftTable(spark,
         Files.createTempDirectory("graft-law-iv").toString,
@@ -147,19 +151,68 @@ class MergeLawsSpec extends AnyFunSuite {
       val rli = new GraftTable(spark,
         Files.createTempDirectory("graft-law-rli").toString,
         Seq("id"), targetFileBytes = 16 * 1024, rliMaintain = true)
+      val bucket = new GraftTable(spark,
+        Files.createTempDirectory("graft-law-bkt").toString,
+        Seq("id"), targetFileBytes = 16 * 1024, bucketCount = 4)
 
-      Seq(interval, rli).foreach { t =>
+      Seq(interval, rli, bucket).foreach { t =>
         if (a.nonEmpty) t.upsert(toDf(a))
         if (b.nonEmpty) t.upsert(toDf(b))
       }
       // the second upsert (when both halves are non-empty) must have
-      // actually exercised the RLI planner on the indexed table
-      if (a.nonEmpty && b.nonEmpty)
+      // actually exercised the RLI and bucket planners
+      if (a.nonEmpty && b.nonEmpty) {
         assert(rli.lastPlanner == "rli", s"trial $trial: planner not engaged")
+        assert(bucket.lastPlanner == "bucket", s"trial $trial: bucket planner not engaged")
+      }
       val expected = reduceBatches(List(a, b).filter(_.nonEmpty))
       assert(snapshot(interval) == expected, s"trial $trial interval: $evs")
       assert(snapshot(rli) == expected, s"trial $trial rli: $evs")
+      assert(snapshot(bucket) == expected, s"trial $trial bucket: $evs")
     }
+    assert(repeated > 0, "no trial fed a batch with a repeated key")
+  }
+
+  test("insert-only law: a batch of new, repeated keys over an existing table equals the reduction") {
+    // every batch key is above the table's key range, so no file is
+    // affected: the batch alone is resolved (no stored row to merge with)
+    val rnd = new scala.util.Random(5151)
+    (1 to 4).foreach { trial =>
+      val base = genEvents(rnd)
+      val fresh = genEvents(rnd).map(e => e.copy(id = e.id + 100))
+      val t = new GraftTable(spark, Files.createTempDirectory("graft-law-ins").toString,
+        Seq("id"), targetFileBytes = 16 * 1024)
+      val batches = List(base, fresh)
+      val seqs = batches.map(bt => t.upsert(toDf(bt)))
+      assert(seqs.last.extra("files_rewritten") == "0", s"trial $trial: a file was affected")
+      val expected = reduceStamped(batches).map { case (k, (e, i)) => k -> ((e.v, seqs(i).seq)) }
+      val got = t.read().selectExpr("id", "v", s"`${Meta.CommitSeq}`")
+        .as[(Long, String, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
+      assert(got == expected, s"trial $trial: base=$base fresh=$fresh")
+    }
+  }
+
+  test("partial-update law: a batch that deletes and re-inserts a stored key starts a new epoch") {
+    // stored key 1 carries (a1, 1); one batch updates it, deletes it and
+    // re-inserts it with only `b` set: the re-insert must not inherit a
+    // pre-delete `a`, from the batch or from the stored row. Key 2's
+    // partial update in the same batch keeps its stored `a`
+    val t = new GraftTable(spark, Files.createTempDirectory("graft-plaw-epoch").toString,
+      Seq("id"), targetFileBytes = 16 * 1024, partialUpdate = true)
+    def df(rows: Seq[(Long, Option[String], Option[Long], String, Boolean)]) =
+      rows.toDF("id", "a", "b", "trx_seq", Meta.Deleted)
+    t.upsert(df(Seq((1L, Some("a1"), Some(1L), "00001", false),
+      (2L, Some("a2"), Some(2L), "00001", false))))
+    val c = t.upsert(df(Seq(
+      (1L, Some("u"), None, "00002", false),
+      (1L, None, None, "00003", true),
+      (1L, None, Some(9L), "00004", false),
+      (2L, None, Some(7L), "00005", false))))
+    assert(c.extra("files_rewritten").toInt >= 1, "the stored keys' file must be affected")
+    val got = t.readUser().select($"id", $"a", $"b")
+      .as[(Long, Option[String], Option[Long])].collect()
+      .map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(got == Map(1L -> ((None, Some(9L))), 2L -> ((Some("a2"), Some(7L)))))
   }
 
   test("partial-update law: any IN-ORDER batch split equals the sequential per-column fold") {

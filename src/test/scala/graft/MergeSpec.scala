@@ -685,18 +685,10 @@ class MergeSpec extends AnyFunSuite {
     assert(t.readUser().filter($"id" === 1L).select("v").as[String].head() == "a")
   }
 
-  test("a small COW upsert into a multi-file table runs a fixed job budget") {
-    // guards the upsert against a second pass creeping back in: one
-    // union+groupBy resolve over the affected files, counted through a
-    // listener scoped to the upsert's job group
-    val t = new GraftTable(spark, tmp(), Seq("id"), targetFileBytes = 2 * 1024)
-    t.bulkInsert(spark.range(0L, 2000L).select(col("id"),
-      concat(lit("v"), col("id").cast("string")).as("v"),
-      lit("001").as("trx_seq"), lit(false).as(Meta.Deleted)))
-    assert(t.latestCommit().get.files.size >= 4, "the base must span several files")
-    val batch = Seq((5L, "u5", "002", false), (1500L, "u1500", "002", false),
-      (5000L, "new", "002", false)).toDF("id", "v", "trx_seq", Meta.Deleted)
-    val group = s"upsert-budget-${java.util.UUID.randomUUID()}"
+  /** Spark jobs that `body` runs, counted by a listener scoped to a job
+    * group. */
+  private def jobsIn(body: => Unit): Int = {
+    val group = s"job-budget-${java.util.UUID.randomUUID()}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -705,16 +697,68 @@ class MergeSpec extends AnyFunSuite {
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
-    sc.setJobGroup(group, "upsert job budget")
-    try t.upsert(batch)
+    sc.setJobGroup(group, "job budget")
+    try body
     finally {
       sc.clearJobGroup()
       org.apache.spark.TestListenerBus.drain(sc)
       sc.removeSparkListener(listener)
     }
+    jobs.get
+  }
+
+  test("a small COW upsert into a multi-file table runs a fixed job budget") {
+    // guards the upsert against a second pass creeping back in: one
+    // exchange-free stab pass plans it, one union+groupBy resolve over the
+    // affected files and the raw batch merges it, and the count that
+    // fills the resolve's cache runs no aggregate exchange of its own
+    val t = new GraftTable(spark, tmp(), Seq("id"), targetFileBytes = 2 * 1024)
+    t.bulkInsert(spark.range(0L, 2000L).select(col("id"),
+      concat(lit("v"), col("id").cast("string")).as("v"),
+      lit("001").as("trx_seq"), lit(false).as(Meta.Deleted)))
+    assert(t.latestCommit().get.files.size >= 4, "the base must span several files")
+    // key 5 arrives twice: the resolve is also the precombine
+    val batch = Seq((5L, "u5-old", "002", false), (5L, "u5", "003", false),
+      (1500L, "u1500", "002", false), (5000L, "new", "002", false))
+      .toDF("id", "v", "trx_seq", Meta.Deleted)
+    val jobs = jobsIn(t.upsert(batch))
     assert(t.readUser().filter($"id".isin(5L, 1500L, 5000L)).select("v").as[String]
       .collect().toSet == Set("u5", "u1500", "new"))
-    assert(jobs.get <= 11, s"upsert ran ${jobs.get} Spark jobs, over its budget of 11")
+    assert(t.readUser().count() == 2001)
+    assert(jobs <= 7, s"upsert ran $jobs Spark jobs, over its budget of 7")
+  }
+
+  test("a small MOR delta commit runs a fixed job budget") {
+    // the delta-log path: the precombined batch is written as logs, with
+    // no affected-file planning, scan or resolve
+    val t = new GraftTable(spark, tmp(), Seq("id"), targetFileBytes = 2 * 1024,
+      tableType = GraftTable.MergeOnRead)
+    t.bulkInsert(spark.range(0L, 2000L).select(col("id"),
+      concat(lit("v"), col("id").cast("string")).as("v"),
+      lit("001").as("trx_seq"), lit(false).as(Meta.Deleted)))
+    val batch = Seq((5L, "u5-old", "002", false), (5L, "u5", "003", false),
+      (1500L, "u1500", "002", false), (5000L, "new", "002", false))
+      .toDF("id", "v", "trx_seq", Meta.Deleted)
+    val jobs = jobsIn(t.upsert(batch))
+    assert(t.latestCommit().get.logFiles.nonEmpty, "the upsert must take the delta-log path")
+    assert(t.readUser().filter($"id".isin(5L, 1500L, 5000L)).select("v").as[String]
+      .collect().toSet == Set("u5", "u1500", "new"))
+    assert(jobs <= 3, s"delta commit ran $jobs Spark jobs, over its budget of 3")
+  }
+
+  test("an upsert the schema widening rejects leaves no cached batch behind") {
+    // the batch is cached for the planner and the resolve; a failure
+    // between the two (here: an unwidenable column type) must release it
+    val t = mkTable(tmp())
+    t.bulkInsert((0L until 200L).toDF("id")
+      .withColumn("n", col("id").cast("int"))
+      .withColumn("trx_seq", lit("001")))
+    def cached = org.apache.spark.sql.TestCacheManager.entries(spark)
+    val before = cached
+    val clash = Seq((5L, "not-a-number", "002"), (500L, "x", "002"))
+      .toDF("id", "n", "trx_seq")
+    intercept[IllegalArgumentException](t.upsert(clash))
+    assert(cached == before, s"the failed upsert left ${cached - before} cached frame(s)")
   }
 
   test("a small-file COW upsert rolls several disjoint key-sorted files per write task") {
