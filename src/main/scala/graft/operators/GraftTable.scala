@@ -629,7 +629,10 @@ class GraftTable(
         val keyed =
           if (keyFields.forall(raw.columns.contains)) KeyGen.withRecordKey(raw, keyFields)
           else raw
-        val ordered = (schema.fieldNames.filter(keyed.columns.contains) ++
+        // partition columns last, as the plain scan discovers them, so
+        // the union's order does not depend on which dir comes first
+        val ordered = ((schema.fieldNames.filterNot(partitionFields.contains) ++
+          partitionFields).filter(keyed.columns.contains) ++
           (if (keyed.columns.contains(Meta.RecordKey) &&
             !schema.fieldNames.contains(Meta.RecordKey)) Seq(Meta.RecordKey) else Seq.empty))
         keyed.select(ordered.map(col).toIndexedSeq: _*)
@@ -2220,6 +2223,34 @@ class GraftTable(
 
   /** Snapshot read without engine meta columns. */
   def readUser(): DataFrame = read().drop(Meta.RecordKey, Meta.CommitSeq)
+
+  /** The schema of [[readUser]], from the manifest alone: no scan is
+    * planned. */
+  def userSchema(): org.apache.spark.sql.types.StructType =
+    userSchemaOf(timeline.latest().getOrElse(
+      throw new IllegalStateException(s"no commits at $root")))
+
+  /** The schema of [[readAsOf]]`(seq)` without meta columns. */
+  def userSchemaAsOf(seq: Long): org.apache.spark.sql.types.StructType =
+    userSchemaOf(timeline.read(seq))
+
+  /** What a snapshot scan of `c` yields, meta columns dropped. A commit
+    * without files reads as an empty frame of the manifest schema as
+    * recorded. Otherwise the parquet scan makes every column nullable and
+    * puts the partition columns it discovers from the directory layout
+    * last, in layout order; the MOR merge and the union keep that shape. */
+  private def userSchemaOf(c: Commit): org.apache.spark.sql.types.StructType = {
+    val s = org.apache.spark.sql.types.DataType.fromJson(c.schemaJson)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val user = s.fields.filterNot(f => f.name == Meta.RecordKey || f.name == Meta.CommitSeq)
+    if (c.files.isEmpty && c.logFiles.isEmpty)
+      org.apache.spark.sql.types.StructType(user)
+    else {
+      val (parts, data) = user.partition(f => partitionFields.contains(f.name))
+      org.apache.spark.sql.GraftSqlBridge.asNullable(org.apache.spark.sql.types.StructType(
+        data ++ partitionFields.flatMap(p => parts.find(_.name == p))))
+    }
+  }
 
   /** Filter-triaged USER snapshot — the DSv2 catalog scan path
     * (`SELECT ... FROM graft.t WHERE ...`). Every pushed conjunct that

@@ -4,16 +4,19 @@ import java.util
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
+import org.apache.spark.sql.sources.{Filter, InsertableRelation}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -38,17 +41,20 @@ import graft.operators.GraftTable
   * so a string literal containing the phrase can never be corrupted
   * (the defect of the retired regex doorway).
   *
-  * Read path: each table surfaces through the V2→V1 bridge
-  * ([[org.apache.spark.sql.connector.read.V1Scan]]) whose relation is
-  * the engine's own snapshot plan (MOR log merge, meta columns
-  * dropped). Pushed filters do TWO jobs before the bridge's row
-  * boundary: on live tables they run the MANIFEST TRIAGE
+  * Read path: a table's schema comes from its manifest
+  * ([[graft.operators.GraftTable.userSchema]]), so resolving a query
+  * builds no snapshot plan. After Spark's V2 filter and column
+  * push-down, [[GraftScanBuilder]] builds the engine's own snapshot
+  * DataFrame, and [[GraftScanSplice]] puts that DataFrame's optimized
+  * plan in place of the scan: Spark plans and runs ONE query, whose
+  * parquet scans (and MOR log merge) sit inside the outer plan. Pushed
+  * filters do two jobs there: they run the MANIFEST TRIAGE
   * ([[graft.operators.GraftTable.readUserPruned]] — key interval stab,
   * key/column blooms, column min/max stats, partition values) so the
-  * snapshot plan is built over only the admitted files, and they are
-  * re-applied as plan-level filters so the parquet scan inside sees
-  * them too. This is where 100-TB pruning happens: a SQL point query
-  * schedules O(matching files) tasks, not O(files).
+  * snapshot is built over only the admitted files, and they are applied
+  * as plan filters so each parquet scan sees them too. This is where
+  * 100-TB pruning happens: a SQL point query schedules O(matching
+  * files) tasks, not O(files).
   *
   * DML writes ARE supported (the Hudi Spark-SQL mutation surface):
   * `INSERT INTO graft.t` upserts the query's rows (key collisions
@@ -67,8 +73,13 @@ import graft.operators.GraftTable
 class GraftCatalog extends TableCatalog {
   private var catalogName: String = "graft"
 
-  override def initialize(name: String, options: CaseInsensitiveStringMap): Unit =
+  override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
+    // a session that names this catalog only in its conf gets the splice
+    // here: Spark loads the catalog while analyzing the first query that
+    // uses it, before that query is optimized
+    SparkSession.getActiveSession.foreach(GraftScanSplice.register)
+  }
 
   override def name(): String = catalogName
 
@@ -113,10 +124,7 @@ class GraftCatalog extends TableCatalog {
       warehouseRoot(fullName(ident)).isDefined
 
   override def loadTable(ident: Identifier): Table =
-    new GraftV2Table(s"$catalogName.${fullName(ident)}",
-      () => resolve(ident).readUser(),
-      pruner = Some(fs => resolve(ident).readUserPruned(fs)),
-      writeTable = Some(resolve(ident)))
+    new GraftV2Table(s"$catalogName.${fullName(ident)}", resolve(ident), asOf = None)
 
   /** `VERSION AS OF <seq>` — Spark hands the version over as a string. */
   override def loadTable(ident: Identifier, version: String): Table = {
@@ -126,10 +134,7 @@ class GraftCatalog extends TableCatalog {
         throw new IllegalArgumentException(
           s"graft version must be a commit seq (long): $version")
       }
-    val t = resolve(ident)
-    new GraftV2Table(s"$catalogName.${fullName(ident)}@v$version",
-      () => t.readAsOf(seq).drop(Meta.RecordKey, Meta.CommitSeq),
-      pruner = Some(fs => t.readUserPrunedAsOf(seq, fs)))
+    new GraftV2Table(s"$catalogName.${fullName(ident)}@v$version", resolve(ident), Some(seq))
   }
 
   /** `TIMESTAMP AS OF <ts>` — Spark hands epoch MICROseconds. The
@@ -137,10 +142,8 @@ class GraftCatalog extends TableCatalog {
     * triage and its snapshot agree on one manifest. */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
     val t = resolve(ident)
-    val seq = t.seqAsOfTime(timestampMicros / 1000L)
-    new GraftV2Table(s"$catalogName.${fullName(ident)}@t$timestampMicros",
-      () => t.readAsOf(seq).drop(Meta.RecordKey, Meta.CommitSeq),
-      pruner = Some(fs => t.readUserPrunedAsOf(seq, fs)))
+    new GraftV2Table(s"$catalogName.${fullName(ident)}@t$timestampMicros", t,
+      Some(t.seqAsOfTime(timestampMicros / 1000L)))
   }
 
   /** SQL DDL — `CREATE TABLE graft.<name> (...) TBLPROPERTIES (...)` and
@@ -412,23 +415,23 @@ class GraftCatalog extends TableCatalog {
   }
 }
 
-/** A registered graft table (or one of its time-travel snapshots) seen
-  * through DSv2. `mkDf` is re-evaluated per scan so the LIVE table always
-  * reads its current snapshot, while time-travel instances pin a seq.
-  * `pruner` (live tables) is the manifest triage —
-  * [[graft.operators.GraftTable.readUserPruned]] — consulted per scan
-  * with the pushed filters. */
-private[sql] class GraftV2Table(tableName: String, mkDf: () => DataFrame,
-    pruner: Option[Seq[Filter] => graft.operators.PrunedScan] = None,
-    writeTable: Option[GraftTable] = None)
+/** A registered graft table (`asOf` None) or one of its time-travel
+  * snapshots (`asOf` = the pinned commit seq) seen through DSv2. Each
+  * scan triages the manifest afresh with its pushed filters
+  * ([[graft.operators.GraftTable.readUserPruned]] /
+  * `readUserPrunedAsOf`), so the LIVE table always reads its current
+  * snapshot. */
+private[sql] class GraftV2Table(tableName: String, table: GraftTable, asOf: Option[Long])
     extends Table with SupportsRead with SupportsWrite {
 
+  private val writeTable = if (asOf.isEmpty) Some(table) else None
+
   override def name(): String = tableName
-  // Catalyst calls schema() several times per resolution; building the
-  // snapshot plan involves a manifest read, so resolve it once per Table
-  // instance (instances are minted per loadTable call, so a LIVE table
-  // still sees fresh schemas across statements)
-  private lazy val resolvedSchema: StructType = mkDf().schema
+  // Catalyst calls schema() several times per resolution; read the
+  // manifest once per Table instance (instances are minted per loadTable
+  // call, so a LIVE table still sees fresh schemas across statements)
+  private lazy val resolvedSchema: StructType =
+    asOf.fold(table.userSchema())(table.userSchemaAsOf)
   override def schema(): StructType = resolvedSchema
 
   /** Engine configuration surfaced to `SHOW TBLPROPERTIES` /
@@ -468,7 +471,9 @@ private[sql] class GraftV2Table(tableName: String, mkDf: () => DataFrame,
       else Set.empty[TableCapability])).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(tableName, mkDf, pruner, writeTable, options)
+    new GraftScanBuilder(tableName,
+      fs => asOf.fold(table.readUserPruned(fs))(table.readUserPrunedAsOf(_, fs)),
+      writeTable, options)
 
   /** SQL DML writes (`INSERT INTO graft.t` / `INSERT OVERWRITE graft.t`)
     * through the V1 write bridge: the incoming query arrives as a whole
@@ -524,27 +529,28 @@ private[sql] class GraftWriteBuilder(t: GraftTable, info: LogicalWriteInfo,
 /** Scan builder with REAL pushdown into the snapshot plan, two layers
   * deep:
   *
-  *  1. **Manifest triage** (live tables): pushed filters route through
-  *     the table's own file-skipping indexes — record-key interval stab
-  *     + key bloom, column min/max stats, column blooms, partition
-  *     values — so the snapshot DataFrame is built from the ADMITTED
-  *     file subset before any task is scheduled. A
-  *     `SELECT ... FROM graft.t WHERE key = x` schedules O(log files)
-  *     planning work and O(matching files) tasks, not O(files).
+  *  1. **Manifest triage**: pushed filters route through the table's own
+  *     file-skipping indexes — record-key interval stab + key bloom,
+  *     column min/max stats, column blooms, partition values — so the
+  *     snapshot DataFrame is built from the ADMITTED file subset before
+  *     any task is scheduled. A `SELECT ... FROM graft.t WHERE key = x`
+  *     schedules O(log files) planning work and O(matching files) tasks,
+  *     not O(files).
   *  2. **Plan-level pushdown**: pruned columns and translatable filters
-  *     are applied to that DataFrame BEFORE the V1 row boundary, so
-  *     Catalyst's parquet scan inside the snapshot plan sees them
-  *     (`ReadSchema` narrows, `PushedFilters` populate).
+  *     are applied to that DataFrame, whose optimized plan
+  *     [[GraftScanSplice]] then puts in place of the scan, so each
+  *     parquet scan in the outer plan sees them (`ReadSchema` narrows,
+  *     `PushedFilters` populate).
   *
   * Every filter is ALSO returned to Spark as a residual (`pushFilters`
   * returns its input), so correctness never depends on the translation
   * or the triage — both only ever shrink the scanned set, never the
   * result. Per-scan admitted/total file counts are recorded in
   * [[GraftScanMetrics]]. */
-private[sql] class GraftScanBuilder(tableName: String, mkDf: () => DataFrame,
-    pruner: Option[Seq[Filter] => graft.operators.PrunedScan],
-    liveTable: Option[GraftTable] = None,
-    options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty())
+private[sql] class GraftScanBuilder(tableName: String,
+    prune: Seq[Filter] => graft.operators.PrunedScan,
+    liveTable: Option[GraftTable],
+    options: CaseInsensitiveStringMap)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
 
@@ -561,67 +567,94 @@ private[sql] class GraftScanBuilder(tableName: String, mkDf: () => DataFrame,
 
   override def pushedFilters(): Array[Filter] = pushed
 
-  override def build(): Scan = new V1Scan {
-    private lazy val df = {
-      val base = pruner match {
-        case Some(p) =>
-          val ps = p(pushed.toSeq)
-          GraftScanMetrics.record(tableName, ps.admittedFiles, ps.totalFiles)
-          ps.df
-        case None => mkDf()
-      }
-      val filtered = pushed.foldLeft(base)((d, f) =>
-        GraftScanBuilder.toColumn(f).map(d.filter).getOrElse(d))
-      required match {
-        case Some(s) if s.nonEmpty => filtered.select(s.fieldNames.map(col).toIndexedSeq: _*)
-        case Some(_) => filtered.select() // count(*)-style: zero columns, rows kept
-        case None => filtered
-      }
+  override def build(): Scan = new GraftScan(tableName, () => {
+    val ps = prune(pushed.toSeq)
+    GraftScanMetrics.record(tableName, ps.admittedFiles, ps.totalFiles)
+    val filtered = pushed.foldLeft(ps.df)((d, f) =>
+      GraftScanBuilder.toColumn(f).map(d.filter).getOrElse(d))
+    required match {
+      case Some(s) if s.nonEmpty => filtered.select(s.fieldNames.map(col).toIndexedSeq: _*)
+      case Some(_) => filtered.select() // count(*)-style: zero columns, rows kept
+      case None => filtered
     }
-    override def readSchema(): StructType = df.schema
-    override def toV1TableScan[T <: BaseRelation with TableScan](
-        context: SQLContext): T =
-      new BaseRelation with TableScan {
-        override def sqlContext: SQLContext = context
-        override def schema: StructType = df.schema
-        override def buildScan(): RDD[Row] = df.rdd
-      }.asInstanceOf[T]
-    /** `spark.readStream.table("graft.t")` — micro-batches planned off
-      * the commit timeline ([[graft.streaming.GraftMicroBatchStream]]);
-      * the pruned column set flows through as the stream schema. A
-      * `startingVersion` read option (mid-timeline resume for a CDC
-      * consumer — what Delta's option of the same name serves) starts a
-      * FRESH checkpoint from a named commit seq: N names the consumer's
-      * LAST SEEN commit, so the first batch is exactly the changes
-      * AFTER seq N — note Delta's convention differs (its N is the
-      * first version DELIVERED; pass N-1 here for that reading).
-      * `"latest"` starts from the tip (only commits after stream
-      * start); without the option the fresh stream does
-      * snapshot-then-changes. Checkpoint resume ignores it either way
-      * (Spark's offset log wins). */
-    override def toMicroBatchStream(checkpointLocation: String)
-        : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-      liveTable match {
-        case Some(t) =>
-          val startFrom = Option(options.get("startingVersion")).map {
-            // empty table: -1 keeps snapshot-then-changes, which for a
-            // table empty at stream start IS "only what arrives later"
-            case v if v.equalsIgnoreCase("latest") =>
-              t.latestCommit().map(_.seq).getOrElse(-1L)
-            case v =>
-              val seq =
-                try v.toLong
-                catch { case _: NumberFormatException =>
-                  throw new IllegalArgumentException(
-                    s"startingVersion must be a commit seq (long) or 'latest': $v")
-                }
-              require(seq >= 0, s"startingVersion must be >= 0 (got $seq)")
-              seq
-          }
-          new graft.streaming.GraftMicroBatchStream(t, df.schema, startFrom)
-        case None => throw new UnsupportedOperationException(
-          s"$tableName is a time-travel snapshot: no streaming read")
-      }
+  }, liveTable, options)
+}
+
+/** One catalog scan: the pruned snapshot DataFrame, built at most once
+  * (so the triage, and its [[GraftScanMetrics]] record, runs once per
+  * scan). A batch read never runs it as a scan of its own:
+  * [[GraftScanSplice]] replaces it with the DataFrame's plan. */
+private[sql] class GraftScan(tableName: String, pruned: () => DataFrame,
+    liveTable: Option[GraftTable], options: CaseInsensitiveStringMap) extends Scan {
+  private[sql] lazy val df: DataFrame = pruned()
+  override def readSchema(): StructType = df.schema
+  override def description(): String = s"GraftScan $tableName"
+  override def toBatch: Batch = throw new IllegalStateException(
+    s"$description reached physical planning: the session lacks " +
+      "GraftScanSplice (GraftSql.install registers it)")
+  /** `spark.readStream.table("graft.t")` — micro-batches planned off
+    * the commit timeline ([[graft.streaming.GraftMicroBatchStream]]);
+    * the pruned column set flows through as the stream schema. A
+    * `startingVersion` read option (mid-timeline resume for a CDC
+    * consumer — what Delta's option of the same name serves) starts a
+    * FRESH checkpoint from a named commit seq: N names the consumer's
+    * LAST SEEN commit, so the first batch is exactly the changes
+    * AFTER seq N — note Delta's convention differs (its N is the
+    * first version DELIVERED; pass N-1 here for that reading).
+    * `"latest"` starts from the tip (only commits after stream
+    * start); without the option the fresh stream does
+    * snapshot-then-changes. Checkpoint resume ignores it either way
+    * (Spark's offset log wins). */
+  override def toMicroBatchStream(checkpointLocation: String)
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+    liveTable match {
+      case Some(t) =>
+        val startFrom = Option(options.get("startingVersion")).map {
+          // empty table: -1 keeps snapshot-then-changes, which for a
+          // table empty at stream start IS "only what arrives later"
+          case v if v.equalsIgnoreCase("latest") =>
+            t.latestCommit().map(_.seq).getOrElse(-1L)
+          case v =>
+            val seq =
+              try v.toLong
+              catch { case _: NumberFormatException =>
+                throw new IllegalArgumentException(
+                  s"startingVersion must be a commit seq (long) or 'latest': $v")
+              }
+            require(seq >= 0, s"startingVersion must be >= 0 (got $seq)")
+            seq
+        }
+        new graft.streaming.GraftMicroBatchStream(t, readSchema(), startFrom)
+      case None => throw new UnsupportedOperationException(
+        s"$tableName is a time-travel snapshot: no streaming read")
+    }
+}
+
+/** The optimizer rule that makes a catalog read one query: after Spark's
+  * V2 filter and column push-down, each [[GraftScan]] relation becomes
+  * its pruned DataFrame's optimized plan, with the output re-aliased to
+  * the relation's attribute ids. Spark then plans the parquet scans, the
+  * MOR merge's shuffle and the outer operators together: no query is
+  * planned or run inside physical planning, codegen and AQE see the
+  * whole plan, and join planning sees the files' real sizes. It runs in
+  * the "User Provided Optimizers" batch, the one batch after push-down
+  * that a live session can extend. */
+private[sql] object GraftScanSplice extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
+    case r: DataSourceV2ScanRelation if r.scan.isInstanceOf[GraftScan] =>
+      val inner = r.scan.asInstanceOf[GraftScan].df.queryExecution.optimizedPlan
+      require(inner.output.map(_.dataType) == r.output.map(_.dataType),
+        s"${r.scan.description()}: snapshot plan output ${inner.output} does not " +
+          s"match the scan's ${r.output}")
+      Project(inner.output.zip(r.output).map { case (in, out) =>
+        Alias(in, out.name)(exprId = out.exprId, qualifier = out.qualifier)
+      }, inner)
+  }
+
+  /** Add the rule to `spark`'s optimizer (idempotent). */
+  def register(spark: SparkSession): Unit = synchronized {
+    val ex = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    if (!ex.extraOptimizations.contains(this)) ex.extraOptimizations :+= this
   }
 }
 

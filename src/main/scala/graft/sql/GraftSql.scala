@@ -64,11 +64,14 @@ object GraftSql {
   /** Install the `graft` DSv2 catalog in the session (idempotent) WITHOUT
     * registering any table — the metastore-less entry point: pair with
     * `spark.sql.catalog.graft.warehouse=<dir>` and every self-described
-    * table directory under it resolves as `graft.<name>`. */
+    * table directory under it resolves as `graft.<name>`. Also adds the
+    * optimizer rule that plans a catalog read as one query
+    * ([[GraftScanSplice]]). */
   def install(spark: SparkSession): Unit = {
     val key = "spark.sql.catalog.graft"
     if (spark.conf.getOption(key).isEmpty)
       spark.conf.set(key, classOf[GraftCatalog].getName)
+    GraftScanSplice.register(spark)
   }
 
   /** Remove `name` from the session registry and drop its bare-name temp
