@@ -1544,49 +1544,19 @@ class GraftTable(
   })
 
   /** Predicate DELETE over conjunctive range predicates (SQL
-    * `DELETE WHERE c1 BETWEEN ... AND c2 BETWEEN ...`): triaged through
-    * the column-stats index — files PROVABLY DISJOINT from the box on any
-    * predicate column carry forward untouched (zero I/O; with the table
-    * clustered or z-ordered on the predicate columns that is almost all
-    * of them), and only stat-overlapping files are read and rewritten
-    * without the matching rows. Rows with NULL in any predicate column
-    * never match (SQL three-valued logic) and always survive. Bounds
-    * follow [[readColumnBox]]'s typing rules.
+    * `DELETE WHERE c1 BETWEEN ... AND c2 BETWEEN ...`): [[deleteRows]]
+    * with the box as its triage filters, so files [[triageKeep]] proves
+    * disjoint from the box carry forward untouched (zero I/O; with the
+    * table clustered or z-ordered on the predicate columns that is almost
+    * all of them) and only the admitted files are rewritten without the
+    * matching rows. Rows with NULL in any predicate column never match
+    * (SQL three-valued logic) and always survive. Bounds follow
+    * [[readColumnBox]]'s typing rules.
     */
-  def deleteWhere(ranges: Seq[(String, Any, Any)]): Commit = withLock(retryOnConflict {
-    require(ranges.nonEmpty, "empty delete predicate")
-    val prev = timeline.latest().getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
-    requireCompacted(prev, "deleteWhere")
-    val typed = ranges.map { case (column, lo0, hi0) =>
-      val (kl, lo, loLit) = GraftTable.encodeBound(lo0)
-      val (kh, hi, hiLit) = GraftTable.encodeBound(hi0)
-      require(kl == kh, s"$column: mixed bound types ($kl vs $kh)")
-      require(GraftTable.cmpStat(kl, lo, hi) <= 0, s"empty range [$lo, $hi] on $column")
-      (column, kl, lo, hi, loLit, hiLit)
-    }
-    val overlapping = typed.foldLeft(prev.files) { case (fs, (c, k, lo, hi, _, _)) =>
-      GraftTable.filesInColumnRange(fs, c, k, lo, hi)
-    }
-    val overlapSet = overlapping.map(_.path).toSet
-    val carried = prev.files.filterNot(f => overlapSet(f.path))
-    val seq = prev.seq + 1
-    val matches = typed.map { case (c, _, _, _, loLit, hiLit) =>
-      col(c) >= loLit && col(c) <= hiLit
-    }.reduce(_ && _)
-    val prevSchema = org.apache.spark.sql.types.DataType.fromJson(prev.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val newFiles =
-      if (overlapping.isEmpty) Seq.empty[DataFile]
-      else writeFiles(
-        scanFiles(overlapping, prevSchema).filter(!coalesce(matches, lit(false))),
-        seq, overlapping.map(_.bytes).sum)
-    commitOrCleanStage(Commit(seq, "delete_where", carried ++ newFiles,
-      prev.schemaJson, prev.checkpoint, System.currentTimeMillis(),
-      extra = GraftTable.writeMetrics(newFiles) +
-        ("files_rewritten" -> overlapping.size.toString) +
-        ("files_carried" -> carried.size.toString)), newFiles)
-  })
+  def deleteWhere(ranges: Seq[(String, Any, Any)]): Commit = {
+    val (filters, residual) = GraftTable.boxPredicate(ranges)
+    deleteRows(residual, filters)
+  }
 
   /** Pruned PARTIAL REWRITE shared by the SQL row-level mutations
     * (`UPDATE graft.t` / `DELETE FROM graft.t`): the files the manifest
@@ -2075,27 +2045,26 @@ class GraftTable(
     merged
   }
 
-  /** Merge-on-read view of a commit: base files unioned with delta logs,
-    * latest-wins per key, tombstones dropped. One hash shuffle — the same
-    * plan shape as the COW merge, applied at read time.
+  /** The snapshot view of a (possibly file-pruned) commit — the one place
+    * a read decides how to scan. No outstanding logs: a plain parquet scan
+    * of the base files under the pinned manifest schema (older files
+    * null-fill newer columns; full Catalyst pushdown applies). Outstanding
+    * logs: merge-on-read — base files unioned with the logs, latest-wins
+    * per key, tombstones dropped; one hash shuffle, the COW merge's plan
+    * shape applied at read time.
     */
-  private def mergedView(c: Commit): DataFrame = {
+  private def snapshot(c: Commit): DataFrame = {
     val schema = org.apache.spark.sql.types.DataType.fromJson(c.schemaJson)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
-    def scan(files: Seq[DataFile]): Option[DataFrame] =
-      if (files.isEmpty) None
-      else Some(scanFiles(files, schema))
-    val parts = scan(c.files).toSeq ++ scan(c.logFiles).toSeq
-    if (parts.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val all = parts.reduce(_.unionByName(_, allowMissingColumns = true))
-    if (c.logFiles.isEmpty) all
-    else {
-      val merged = resolveLatest(all, commitSeq = Some(0L))
-      if (all.columns.contains(Meta.Deleted))
-        merged.filter(!coalesce(col(Meta.Deleted), lit(false)))
-      else merged
-    }
+    if (c.logFiles.isEmpty) return scanFiles(c.files, schema)
+    val logs = scanFiles(c.logFiles, schema)
+    val all =
+      if (c.files.isEmpty) logs
+      else scanFiles(c.files, schema).unionByName(logs, allowMissingColumns = true)
+    val merged = resolveLatest(all, commitSeq = Some(0L))
+    if (all.columns.contains(Meta.Deleted))
+      merged.filter(!coalesce(col(Meta.Deleted), lit(false)))
+    else merged
   }
 
   /** T4 — compaction: materialize the merged view into fresh base files and
@@ -2191,7 +2160,7 @@ class GraftTable(
     val est = (rewrite ++ prev.logFiles).map(_.bytes).sum
     // merge ONLY the overlapping base subset against the full log set;
     // persist: range-bound sampling must not re-run the base⋈log merge
-    val merged = mergedView(prev.copy(files = rewrite))
+    val merged = snapshot(prev.copy(files = rewrite))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val files = writeFiles(merged, seq, est)
@@ -2207,19 +2176,9 @@ class GraftTable(
     } finally merged.unpersist(blocking = false)
   }
 
-  /** Snapshot read. COW (or compacted MOR): plain parquet scan of the
-    * manifest's file list — full Catalyst pushdown/pruning applies. MOR
-    * with outstanding logs: merge-on-read view. */
-  def read(): DataFrame = {
-    val c = timeline.latest().getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
-    val schema = org.apache.spark.sql.types.DataType.fromJson(c.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    if (c.logFiles.nonEmpty) mergedView(c)
-    // explicit manifest schema: older files (pre-schema-evolution) null-fill
-    // new columns, and no distributed footer-merge pass is needed
-    else scanFiles(c.files, schema)
-  }
+  /** Snapshot read of the latest commit (see [[snapshot]]). */
+  def read(): DataFrame = snapshot(timeline.latest().getOrElse(
+    throw new IllegalStateException(s"no commits at $root")))
 
   /** Snapshot read without engine meta columns. */
   def readUser(): DataFrame = read().drop(Meta.RecordKey, Meta.CommitSeq)
@@ -2256,21 +2215,14 @@ class GraftTable(
     * (`SELECT ... FROM graft.t WHERE ...`). Every pushed conjunct that
     * names the record key, a tracked stats column, a registered bloom
     * column, or a partition column prunes the MANIFEST file list through
-    * the same triage the API reads use — interval stab + key bloom
-    * ([[readKeys]]), column min/max overlap ([[readColumnBox]]), column
-    * bloom admit ([[readColumnEquals]]), partition match
-    * ([[readPartition]]) — BEFORE any task is scheduled, so a SQL point
-    * query on a 100k-file table schedules O(files-that-can-match) tasks,
-    * not 100k. Untranslatable predicates (and untracked columns) prune
-    * nothing; the SQL layer re-applies EVERY filter residually, so the
-    * triage only ever has to be conservative, never exact.
-    *
-    * Soundness: key-based pruning holds even on MOR with outstanding
-    * logs (every version of key k lives in a file whose interval
-    * contains k); column-stats/bloom/partition pruning applies only when
-    * no logs are outstanding — a merged row's latest values are not
-    * bounded by any single file's stats (same rule as [[readColumnBox]]
-    * and [[readPartition]]).
+    * [[triageKeep]] — the same triage [[readColumnBox]],
+    * [[readColumnEquals]] and [[readPartition]] use — BEFORE any task is
+    * scheduled, so a SQL point query on a 100k-file table schedules
+    * O(files-that-can-match) tasks, not 100k. Untranslatable predicates
+    * (and untracked columns) prune nothing; the SQL layer re-applies
+    * EVERY filter residually, so the triage only ever has to be
+    * conservative, never exact. Which prunes hold while MOR logs are
+    * outstanding is [[triageKeep]]'s one rule.
     */
   def readUserPruned(filters: Seq[org.apache.spark.sql.sources.Filter]): PrunedScan =
     prunedScanOf(timeline.latest().getOrElse(
@@ -2278,19 +2230,38 @@ class GraftTable(
 
   private def prunedScanOf(c: Commit,
       filters: Seq[org.apache.spark.sql.sources.Filter]): PrunedScan = {
-    val total = c.files.size + c.logFiles.size
     val keep = triageKeep(c, filters)
-    val admitted = c.files.count(keep) + c.logFiles.count(keep)
+    val (admitted, total) = admittedOf(c, keep)
     PrunedScan(prunedRead(c, keep).drop(Meta.RecordKey, Meta.CommitSeq),
       admitted, total)
   }
 
-  /** The manifest-triage predicate for a conjunction of pushed source
-    * filters against commit `c` — the shared core of the catalog scan
-    * ([[readUserPruned]]) and the SQL row-level rewrites
-    * ([[updateWhere]]/[[deleteRows]]). Conservative by construction:
-    * a file is dropped only when one of the engine's own indexes proves
-    * no matching row can live in it. */
+  /** (admitted, total) files of commit `c` under `keep`, base and log
+    * files counted on both sides — the probe counts the pruned reads
+    * report. */
+  private def admittedOf(c: Commit, keep: DataFile => Boolean): (Int, Int) =
+    (c.files.count(keep) + c.logFiles.count(keep), c.files.size + c.logFiles.size)
+
+  /** THE manifest triage: the file predicate for a conjunction of source
+    * filters against commit `c`. Every pruned read goes through it — the
+    * catalog scan ([[readUserPruned]]), [[readColumnBox]],
+    * [[readColumnEquals]], [[readPartition]] and the SQL row-level
+    * rewrites ([[updateWhere]]/[[deleteRows]]/[[deleteWhere]]).
+    * Conservative by construction: a file is dropped only when one of the
+    * engine's own indexes proves no matching row can live in it.
+    *
+    * It is also the ONE place that says which prunes stay sound while MOR
+    * delta logs are outstanding (the merged view, see [[snapshot]]):
+    *  - key triage always applies: every version of key k lives in a file
+    *    whose interval contains k;
+    *  - stats and bloom triage apply only with no logs outstanding: a
+    *    non-key column's value differs across versions, so pruning a
+    *    superseding version would resurrect a stale matching row;
+    *  - partition triage applies with no logs outstanding OR under a
+    *    non-global index, where (partition, key) is the row identity and
+    *    the per-partition merge is complete; under a global index a key
+    *    may move partition between versions.
+    */
   private def triageKeep(c: Commit,
       filters: Seq[org.apache.spark.sql.sources.Filter]): DataFile => Boolean = {
     import org.apache.spark.sql.{sources => sf}
@@ -2306,33 +2277,38 @@ class GraftTable(
     }
     val keeps = Seq.newBuilder[DataFile => Boolean]
 
-    // ---- record-key triage ------------------------------------------
+    // ---- record-key triage (sound under outstanding logs) -------------
     // Driver-side replica of the KeyGen encoding (TableModel.scala):
     // zero-padded integrals, identity strings, field-qualified escaped
-    // composites. A POINT probe is sound for any exact encoding (the
-    // stab compares stored strings under one total order); a RANGE bound
-    // additionally needs the encoding to be order-preserving over the
-    // bound — string keys always, integral keys for non-negative bounds
-    // (negative stored keys sort before every padded non-negative AND
-    // are numerically below every non-negative bound, so both prune
+    // composites. The encoding follows the key COLUMN's type, so only a
+    // literal of the same family encodes (an API caller's Long bound on a
+    // string key has no sound probe). A POINT probe is sound for any exact
+    // encoding (the stab compares stored strings under one total order);
+    // a RANGE bound additionally needs the encoding to be order-preserving
+    // over the bound — string keys always, integral keys for non-negative
+    // bounds (negative stored keys sort before every padded non-negative
+    // AND are numerically below every non-negative bound, so both prune
     // directions stay sound).
-    def encKey(v: Any): Option[String] = v match {
-      case null => None
-      case x: Byte  => Some(f"${x.toLong}%019d")
-      case x: Short => Some(f"${x.toLong}%019d")
-      case x: Int   => Some(f"${x.toLong}%019d")
-      case x: Long  => Some(f"$x%019d")
-      case x: String => Some(x)
-      case _ => None // no driver-side canonical form — prune nothing
-    }
-    def rangeEncKey(v: Any): Option[String] = v match {
-      case x: Byte  if x >= 0 => Some(f"${x.toLong}%019d")
-      case x: Short if x >= 0 => Some(f"${x.toLong}%019d")
-      case x: Int   if x >= 0 => Some(f"${x.toLong}%019d")
-      case x: Long  if x >= 0 => Some(f"$x%019d")
-      case x: String => Some(x)
+    lazy val schema = org.apache.spark.sql.types.DataType.fromJson(c.schemaJson)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    def integral(v: Any): Option[Long] = v match {
+      case x: Byte  => Some(x.toLong)
+      case x: Short => Some(x.toLong)
+      case x: Int   => Some(x.toLong)
+      case x: Long  => Some(x)
       case _ => None
     }
+    def encKey(kf: String, v: Any): Option[String] = {
+      import org.apache.spark.sql.types._
+      schema.find(_.name == kf).map(_.dataType) match {
+        case Some(ByteType | ShortType | IntegerType | LongType) =>
+          integral(v).map(x => f"$x%019d")
+        case Some(StringType) => Some(v).collect { case x: String => x }
+        case _ => None // no driver-side canonical form — prune nothing
+      }
+    }
+    def rangeEncKey(kf: String, v: Any): Option[String] =
+      if (integral(v).exists(_ < 0)) None else encKey(kf, v)
     def probeKeep(ks: Seq[String]): DataFile => Boolean = {
       val s = pointKeepSet(c, ks)
       f => s(f.path)
@@ -2345,16 +2321,16 @@ class GraftTable(
       val kf = keyFields.head
       conjuncts.foreach {
         case sf.EqualTo(`kf`, v) =>
-          encKey(v).foreach(k => keeps += probeKeep(Seq(k)))
+          encKey(kf, v).foreach(k => keeps += probeKeep(Seq(k)))
         case sf.In(`kf`, vs) if vs.nonEmpty =>
           // every value must encode — a partial probe set would prune
           // away files holding the unencodable values' rows
-          val ks = vs.toSeq.map(encKey)
+          val ks = vs.toSeq.map(encKey(kf, _))
           if (ks.forall(_.isDefined)) keeps += probeKeep(ks.flatten)
-        case sf.GreaterThan(`kf`, v) => rangeEncKey(v).foreach(lo => keeps += keyLo(lo))
-        case sf.GreaterThanOrEqual(`kf`, v) => rangeEncKey(v).foreach(lo => keeps += keyLo(lo))
-        case sf.LessThan(`kf`, v) => rangeEncKey(v).foreach(hi => keeps += keyHi(hi))
-        case sf.LessThanOrEqual(`kf`, v) => rangeEncKey(v).foreach(hi => keeps += keyHi(hi))
+        case sf.GreaterThan(`kf`, v) => rangeEncKey(kf, v).foreach(lo => keeps += keyLo(lo))
+        case sf.GreaterThanOrEqual(`kf`, v) => rangeEncKey(kf, v).foreach(lo => keeps += keyLo(lo))
+        case sf.LessThan(`kf`, v) => rangeEncKey(kf, v).foreach(hi => keeps += keyHi(hi))
+        case sf.LessThanOrEqual(`kf`, v) => rangeEncKey(kf, v).foreach(hi => keeps += keyHi(hi))
         case _ => ()
       }
     } else {
@@ -2370,14 +2346,15 @@ class GraftTable(
         }
       }.toMap
       if (fieldEq.size == keyFields.size) {
-        val parts = keyFields.map(kf => encKey(fieldEq(kf)).map(e => s"$kf:${esc(e)}"))
+        val parts = keyFields.map(kf => encKey(kf, fieldEq(kf)).map(e => s"$kf:${esc(e)}"))
         if (parts.forall(_.isDefined))
           keeps += probeKeep(Seq(parts.flatten.mkString(",")))
       }
     }
 
-    // ---- stats-column / bloom / partition triage (compacted only) ----
-    if (c.logFiles.isEmpty) {
+    // ---- stats-column / bloom triage (no outstanding logs) ------------
+    val compacted = c.logFiles.isEmpty
+    if (compacted) {
       def statBound(v: Any): Option[(String, String)] = v match {
         case null => None
         case x: Byte   => Some(("long", x.toLong.toString))
@@ -2391,12 +2368,7 @@ class GraftTable(
       }
       def statKeep(column: String, kind: String, lo: Option[String],
           hi: Option[String]): DataFile => Boolean =
-        f => f.colStats.get(column) match {
-          case Some(st) if st.kind == kind =>
-            hi.forall(h => GraftTable.cmpStat(kind, st.min, h) <= 0) &&
-              lo.forall(l => GraftTable.cmpStat(kind, st.max, l) >= 0)
-          case _ => true
-        }
+        GraftTable.statOverlaps(_, column, kind, lo, hi)
       val tracked = statsColumns.toSet
       conjuncts.foreach {
         case sf.EqualTo(a, v) if tracked(a) =>
@@ -2455,19 +2427,21 @@ class GraftTable(
           }
         case _ => ()
       }
-      if (partitionFields.nonEmpty) {
-        val pf = partitionFields.toSet
-        conjuncts.foreach {
-          case sf.EqualTo(a, v) if pf(a) =>
-            val canon = v match {
-              case x: Int => Some(x.toString)
-              case x: Long => Some(x.toString)
-              case x: String => Some(x)
-              case _ => None // hive dir value form not canonical for other types
-            }
-            canon.foreach(s => keeps += (f => f.partition.get(a).forall(_ == s)))
-          case _ => ()
-        }
+    }
+
+    // ---- partition triage (no outstanding logs, or non-global index) --
+    if (partitionFields.nonEmpty && (compacted || !globalIndex)) {
+      val pf = partitionFields.toSet
+      conjuncts.foreach {
+        case sf.EqualTo(a, v) if pf(a) =>
+          val canon = v match {
+            case x: Int => Some(x.toString)
+            case x: Long => Some(x.toString)
+            case x: String => Some(x)
+            case _ => None // hive dir value form not canonical for other types
+          }
+          canon.foreach(s => keeps += (f => f.partition.get(a).forall(_ == s)))
+        case _ => ()
       }
     }
 
@@ -2484,13 +2458,8 @@ class GraftTable(
     * last compaction (schema evolution via delta commits) null-fill: the
     * manifest schema is pinned, so `_ro` and `_rt` stay union-compatible.
     */
-  def readOptimized(): DataFrame = {
-    val c = timeline.latest().getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
-    val schema = org.apache.spark.sql.types.DataType.fromJson(c.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    scanFiles(c.files, schema)
-  }
+  def readOptimized(): DataFrame = snapshot(timeline.latest().getOrElse(
+    throw new IllegalStateException(s"no commits at $root")).copy(logFiles = Nil))
 
   /** Key-range snapshot read with MANIFEST-level file skipping: only files
     * whose [minKey, maxKey] interval overlaps [lo, hi] are scanned (files
@@ -2508,15 +2477,16 @@ class GraftTable(
     def overlaps(f: DataFile): Boolean =
       !GraftTable.hasReliableStats(f) ||
         (GraftTable.cmpKey(f.minKey, hi) <= 0 && GraftTable.cmpKey(f.maxKey, lo) >= 0)
-    lastRangeRead = Some((c.files.count(overlaps), c.files.size))
+    lastRangeRead = Some(admittedOf(c, overlaps))
     // Spark string comparison is UTF8String binary order — the same
     // collation as cmpKey and the parquet stats, so prune and filter agree
     prunedRead(c, overlaps)
       .filter(col(Meta.RecordKey) >= lit(lo) && col(Meta.RecordKey) <= lit(hi))
   }
 
-  /** (admitted, total) manifest files of the most recent [[readKeyRange]]
-    * — the range-read analog of [[lastPointRead]], for plan-shape pins. */
+  /** (admitted, total) base + log files of the most recent
+    * [[readKeyRange]] or [[readKeyRanges]] — the range-read analog of
+    * [[lastPointRead]], for plan-shape pins. */
   @volatile private[graft] var lastRangeRead: Option[(Int, Int)] = None
 
   /** GROUPED key-range read: ONE scan over the union of the per-range
@@ -2552,9 +2522,7 @@ class GraftTable(
       }
       l >= 1 && GraftTable.cmpKey(sorted(l - 1)._2, f.minKey) >= 0
     }
-    val admitted = c.files.count(overlapsAny) +
-      c.logFiles.count(overlapsAny)
-    lastRangeRead = Some((admitted, c.files.size + c.logFiles.size))
+    lastRangeRead = Some(admittedOf(c, overlapsAny))
     prunedRead(c, overlapsAny)
   }
 
@@ -2570,41 +2538,29 @@ class GraftTable(
     readKeyRange(f"$lo%019d", f"$hi%019d")
   }
 
-  /** The shared tail of every pruned read: scan the latest-commit subset
-    * selected by `keep` (applied to base and log files alike), through the
-    * merge-on-read view when logs are outstanding. Callers add their own
-    * exact residual filter. */
-  private def prunedRead(c: Commit, keep: DataFile => Boolean): DataFrame = {
-    val pruned = c.copy(files = c.files.filter(keep),
-      logFiles = c.logFiles.filter(keep))
-    val schema = org.apache.spark.sql.types.DataType.fromJson(c.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    if (pruned.logFiles.nonEmpty) mergedView(pruned)
-    else scanFiles(pruned.files, schema)
-  }
+  /** The shared tail of every pruned read: the [[snapshot]] of the
+    * commit subset `keep` selects (applied to base and log files alike).
+    * `keep` must be sound for the merged view — [[triageKeep]] is the one
+    * rule that says which manifest prunes stay sound while logs are
+    * outstanding. Callers add their own exact residual filter. */
+  private def prunedRead(c: Commit, keep: DataFile => Boolean): DataFrame =
+    snapshot(c.copy(files = c.files.filter(keep), logFiles = c.logFiles.filter(keep)))
 
   /** Partition-pruned snapshot read: scan only files whose hive-style
     * partition values match `spec` (a subset of the partition columns) —
     * pruned from the MANIFEST's recorded values, so no directory listing
     * and no partition discovery job ever runs. The residual filter keeps
     * the result exact even for files written before a partition-evolution.
+    * Whether the partition prune holds under outstanding MOR logs is
+    * [[triageKeep]]'s one rule.
     */
   def readPartition(spec: Map[String, String]): DataFrame = {
     require(spec.nonEmpty, "empty partition spec")
     val unknown = spec.keySet -- partitionFields.toSet
     require(unknown.isEmpty, s"not partition columns: ${unknown.mkString(",")}")
-    val c = timeline.latest().getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
-    val residual = (df: DataFrame) =>
-      spec.foldLeft(df) { case (d, (k, v)) => d.filter(col(k) === lit(v)) }
-    // MOR + GLOBAL index cannot prune logs: a key may have MOVED partition
-    // between versions, and pruning away the superseding other-partition
-    // version would resurrect the stale in-partition row. Non-global
-    // identity is (partition, key), so per-partition merge is complete.
-    if (c.logFiles.nonEmpty && globalIndex) return residual(mergedView(c))
-    def matches(f: DataFile): Boolean =
-      spec.forall { case (k, v) => f.partition.get(k).forall(_ == v) }
-    residual(prunedRead(c, matches))
+    val filters = spec.toSeq.map { case (k, v) => org.apache.spark.sql.sources.EqualTo(k, v) }
+    triagedRead(filters).filter(
+      spec.map { case (k, v) => col(k) === lit(v) }.reduce(_ && _))
   }
 
   /** Multi-key POINT LOOKUP with manifest-level file skipping — the
@@ -2654,19 +2610,21 @@ class GraftTable(
     relevant(c.files) ++ relevant(c.logFiles)
   }
 
+  /** (admitted, total) base + log file counts of this table's most recent
+    * point read — plan-shape observability (the
+    * [[IncrementalJoin.lastFanScan]] pattern): lets a spec assert an IVM
+    * partner lookup actually pruned instead of scanning the state.
+    * Per-instance, test-facing. */
+  @volatile private[graft] var lastPointRead: Option[(Int, Int)] = None
+
   /** The shared tail of every point lookup: interval/bloom-prune commit
     * `c`'s files against the probed keys, scan the survivors, apply the
     * exact residual `IN`. */
-  /** (admitted, total) file counts of this table's most recent point
-    * read — plan-shape observability (the [[IncrementalJoin.lastFanScan]]
-    * pattern): lets a spec assert an IVM partner lookup actually pruned
-    * instead of scanning the state. Per-instance, test-facing. */
-  @volatile private[graft] var lastPointRead: Option[(Int, Int)] = None
-
   private def pointPrunedRead(c: Commit, keys: Seq[String]): DataFrame = {
-    val keep = pointKeepSet(c, keys)
-    lastPointRead = Some((keep.size, c.files.size))
-    prunedRead(c, f => keep(f.path))
+    val keepSet = pointKeepSet(c, keys)
+    val keep = (f: DataFile) => keepSet(f.path)
+    lastPointRead = Some(admittedOf(c, keep))
+    prunedRead(c, keep)
       .filter(col(Meta.RecordKey).isin(keys: _*))
   }
 
@@ -2944,12 +2902,8 @@ class GraftTable(
     * filter keeps the result exact. Files without a usable stat for the
     * column — legacy manifests, kind mismatch, blocks with dropped stats —
     * always join the scan, so pruning is conservative by construction.
-    *
-    * MOR with outstanding logs falls back to filter-after-merge WITHOUT
-    * file pruning: unlike the record key (identical in every version of a
-    * row), a tracked column's value differs across versions, so pruning a
-    * superseding out-of-range version would resurrect a stale in-range row.
-    * Compaction restores the pruned path.
+    * Which prunes stay sound while MOR logs are outstanding is
+    * [[triageKeep]]'s one rule.
     */
   // overloads hand the ORIGINAL typed bounds to the box read — its
   // runtime-type encoding picks the stat kind, so a pre-stringified bound
@@ -2969,31 +2923,11 @@ class GraftTable(
     * same-kind tracked stat prunes files independently (the kept set is
     * the intersection). Bounds are matched to stat kinds by runtime type:
     * Long/Int → long, Double/Float → double, String → string. The exact
-    * residual conjunction runs on the pruned scan; MOR with outstanding
-    * logs falls back to filter-after-merge for the same reason as the
-    * single-column read.
+    * residual conjunction runs on the [[triageKeep]]-pruned snapshot.
     */
   def readColumnBox(ranges: Seq[(String, Any, Any)]): DataFrame = {
-    require(ranges.nonEmpty, "empty box")
-    val typed = ranges.map { case (column, lo0, hi0) =>
-      val (kl, lo, loLit) = GraftTable.encodeBound(lo0)
-      val (kh, hi, hiLit) = GraftTable.encodeBound(hi0)
-      require(kl == kh, s"$column: mixed bound types ($kl vs $kh)")
-      require(GraftTable.cmpStat(kl, lo, hi) <= 0, s"empty range [$lo, $hi] on $column")
-      (column, kl, lo, hi, loLit, hiLit)
-    }
-    val c = timeline.latest().getOrElse(
-      throw new IllegalStateException(s"no commits at $root"))
-    val residual = typed.map { case (column, _, _, _, loLit, hiLit) =>
-      col(column) >= loLit && col(column) <= hiLit
-    }.reduce(_ && _)
-    if (c.logFiles.nonEmpty) return mergedView(c).filter(residual)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(c.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val kept = typed.foldLeft(c.files) { case (fs, (column, kind, lo, hi, _, _)) =>
-      GraftTable.filesInColumnRange(fs, column, kind, lo, hi)
-    }
-    scanFiles(kept, schema).filter(residual)
+    val (filters, residual) = GraftTable.boxPredicate(ranges)
+    triagedRead(filters).filter(residual)
   }
 
   /** EQUALITY lookup on a non-key column through the per-column bloom
@@ -3001,40 +2935,32 @@ class GraftTable(
     * with no correlation to the key layout spans nearly its whole domain
     * in every file, so min/max stats admit everything; the bloom admits
     * only files that really contain the value (~2% false positives, zero
-    * false negatives). Column-stats ranges, when tracked, prune first;
+    * false negatives). Column-stats ranges, when tracked, prune too;
     * files without a bloom for the column always join the scan. The exact
     * residual equality filter (pushed into the parquet scan) keeps the
     * result exact. Long and String probes only — their canonical string
     * form matches the build side's `cast(col as string)` exactly; double
-    * formatting does not round-trip reliably and is rejected.
-    * MOR with outstanding logs falls back to filter-after-merge for the
-    * same reason as [[readColumnRange]].
+    * formatting does not round-trip reliably and is rejected. Pruning
+    * under outstanding MOR logs follows [[triageKeep]]'s one rule.
     */
   def readColumnEquals(column: String, value: Any): DataFrame = {
-    val (kind, str, valLit) = value match {
-      case x: Long   => ("long", x.toString, lit(x))
-      case x: Int    => ("long", x.toLong.toString, lit(x.toLong))
-      case x: String => ("string", x, lit(x))
+    val v = value match {
+      case x: Long   => x
+      case x: Int    => x.toLong
+      case x: String => x
       case other => throw new IllegalArgumentException(
         s"readColumnEquals supports long/string probes, got ${other.getClass.getSimpleName}")
     }
+    triagedRead(Seq(org.apache.spark.sql.sources.EqualTo(column, v)))
+      .filter(col(column) === lit(v))
+  }
+
+  /** The [[triageKeep]]-pruned snapshot of the latest commit for a
+    * conjunction of source filters; callers apply the exact residual. */
+  private def triagedRead(filters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame = {
     val c = timeline.latest().getOrElse(
       throw new IllegalStateException(s"no commits at $root"))
-    val residual = col(column) === valLit
-    if (c.logFiles.nonEmpty) return mergedView(c).filter(residual)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(c.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val h = graft.functions.KeyBloom.hash(str)
-    val kept = GraftTable.filesInColumnRange(c.files, column, kind, str, str)
-      .filter { f =>
-        f.colBlooms.get(column) match {
-          case Some(enc) =>
-            val (nh, bits) = graft.functions.KeyBloom.decode(enc)
-            graft.functions.KeyBloom.contains(bits, nh, h)
-          case None => true
-        }
-      }
-    scanFiles(kept, schema).filter(residual)
+    prunedRead(c, triageKeep(c, filters))
   }
 
   /** Incremental query: rows from files ADDED by commits after `sinceSeq`
@@ -3153,7 +3079,7 @@ class GraftTable(
       else Seq.empty
     val usePrune = prunable && spans.size <= GraftTable.MaxDiffSpans
     def side(c: Commit): DataFrame =
-      if (!usePrune) asOfView(c)
+      if (!usePrune) snapshot(c)
       else {
         def keep(f: DataFile): Boolean =
           !GraftTable.hasReliableStats(f) ||
@@ -3164,8 +3090,7 @@ class GraftTable(
         val inSpan = spans.foldLeft(lit(false)) { case (acc, (lo, hi)) =>
           acc || (col(Meta.RecordKey) >= lit(lo) && col(Meta.RecordKey) <= lit(hi))
         }
-        asOfView(c.copy(files = c.files.filter(keep),
-          logFiles = c.logFiles.filter(keep))).filter(inSpan)
+        prunedRead(c, keep).filter(inSpan)
       }
     val before0 = side(from)
     val after0 = side(to)
@@ -3225,17 +3150,7 @@ class GraftTable(
   /** Time travel: the snapshot as of commit `seq` (must still be on the
     * active timeline — cleaning bounds how far back this reaches, exactly
     * like Hudi's retained-commit window, handler.py:90-91). */
-  def readAsOf(seq: Long): DataFrame = asOfView(timeline.read(seq))
-
-  /** Snapshot view of a (possibly file-pruned) commit: merge-on-read when
-    * logs are present, plain pinned-schema scan otherwise. */
-  private def asOfView(c: Commit): DataFrame =
-    if (c.logFiles.nonEmpty) mergedView(c)
-    else {
-      val schema = org.apache.spark.sql.types.DataType.fromJson(c.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      scanFiles(c.files, schema)
-    }
+  def readAsOf(seq: Long): DataFrame = snapshot(timeline.read(seq))
 
   def latestCommit(): Option[Commit] = timeline.latest()
   def latestCheckpoint(): Option[String] = timeline.latest().flatMap(_.checkpoint)
@@ -3323,10 +3238,8 @@ class GraftTable(
       // the file count still plateaus (IvmSoak asserts <= 4).
       if (inline && prev.logFiles.isEmpty &&
         small.size < GraftTable.InlineFoldMinFiles) return prev
-      val schema = org.apache.spark.sql.types.DataType.fromJson(prev.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      val input =
-        if (prev.logFiles.nonEmpty) read() else scanFiles(small, schema)
+      // with logs outstanding `small` is every base file: the merged view
+      val input = snapshot(prev.copy(files = small))
       val files = writeFiles(input, seq,
         (small ++ prev.logFiles).map(_.bytes).sum,
         layoutSort = clusterSortColumns.map(col))
@@ -3467,15 +3380,7 @@ class GraftTable(
 
   /** Read a savepointed snapshot — valid even after the commit has left
     * the active timeline and its unshared files were cleaned elsewhere. */
-  def readSavepointed(seq: Long): DataFrame = {
-    val c = timeline.readSavepoint(seq)
-    if (c.logFiles.nonEmpty) mergedView(c)
-    else {
-      val schema = org.apache.spark.sql.types.DataType.fromJson(c.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      scanFiles(c.files, schema)
-    }
-  }
+  def readSavepointed(seq: Long): DataFrame = snapshot(timeline.readSavepoint(seq))
 
   /** T2 cleaning — retain `retainCommits` snapshot versions
     * (handler.py:90-91). Also garbage-collects ABANDONED STAGE DIRS: a
@@ -4456,24 +4361,42 @@ object GraftTable {
   }
 
   /** Encode a caller's range bound as (stat kind, canonical stat string,
-    * residual-filter literal) — the ONE bound typing both the box read and
-    * the predicate delete share, so prune and residual can never disagree.
+    * canonical value) — the value feeds both the triage filter and the
+    * residual literal, so prune and residual can never disagree.
     * NaN bounds are rejected: NaN compares false against everything in
     * SQL, so letting one through would prune arbitrarily. */
-  private[operators] def encodeBound(v: Any): (String, String, Column) = v match {
-    case x: Long   => ("long", x.toString, lit(x))
-    case x: Int    => ("long", x.toLong.toString, lit(x.toLong))
+  private[operators] def encodeBound(v: Any): (String, String, Any) = v match {
+    case x: Long   => ("long", x.toString, x)
+    case x: Int    => ("long", x.toLong.toString, x.toLong)
     case x: Double => encodeDoubleBound(x)
     case x: Float  => encodeDoubleBound(x.toDouble)
-    case x: String => ("string", x, lit(x))
+    case x: String => ("string", x, x)
     case other => throw new IllegalArgumentException(
       s"unsupported bound type ${other.getClass.getSimpleName} (long/double/string)")
   }
 
-  private def encodeDoubleBound(x: Double): (String, String, Column) = {
+  private def encodeDoubleBound(x: Double): (String, String, Any) = {
     require(!x.isNaN, "NaN is not a valid range bound")
     val n = normDouble(x)
-    ("double", n.toString, lit(n))
+    ("double", n.toString, n)
+  }
+
+  /** A column BOX (every `(column, lo, hi)` range holds at once) as the
+    * manifest triage's source filters plus the exact residual — the one
+    * bound typing the box read and the predicate delete share. */
+  private[operators] def boxPredicate(ranges: Seq[(String, Any, Any)])
+      : (Seq[org.apache.spark.sql.sources.Filter], Column) = {
+    import org.apache.spark.sql.{sources => sf}
+    require(ranges.nonEmpty, "empty box")
+    val parts = ranges.map { case (column, lo0, hi0) =>
+      val (kl, lo, loV) = encodeBound(lo0)
+      val (kh, hi, hiV) = encodeBound(hi0)
+      require(kl == kh, s"$column: mixed bound types ($kl vs $kh)")
+      require(cmpStat(kl, lo, hi) <= 0, s"empty range [$lo, $hi] on $column")
+      (Seq(sf.GreaterThanOrEqual(column, loV), sf.LessThanOrEqual(column, hiV)),
+        col(column) >= lit(loV) && col(column) <= lit(hiV))
+    }
+    (parts.flatMap(_._1), parts.map(_._2).reduce(_ && _))
   }
 
   /** Typed comparison for [[graft.model.ColStat]] values. Doubles are
@@ -4497,12 +4420,17 @@ object GraftTable {
     * asserting pruning effectiveness. */
   private[graft] def filesInColumnRange(files: Seq[DataFile], column: String,
       kind: String, lo: String, hi: String): Seq[DataFile] =
-    files.filter { f =>
-      f.colStats.get(column) match {
-        case Some(st) if st.kind == kind =>
-          cmpStat(kind, st.min, hi) <= 0 && cmpStat(kind, st.max, lo) >= 0
-        case _ => true
-      }
+    files.filter(statOverlaps(_, column, kind, Some(lo), Some(hi)))
+
+  /** Whether `f`'s recorded stat for `column` may overlap [lo, hi] (an
+    * absent bound is open). A file without a same-kind stat may. */
+  private[operators] def statOverlaps(f: DataFile, column: String, kind: String,
+      lo: Option[String], hi: Option[String]): Boolean =
+    f.colStats.get(column) match {
+      case Some(st) if st.kind == kind =>
+        hi.forall(h => cmpStat(kind, st.min, h) <= 0) &&
+          lo.forall(l => cmpStat(kind, st.max, l) >= 0)
+      case _ => true
     }
 
   /** Commit metrics recorded in `Commit.extra` (the Hudi commit-metadata

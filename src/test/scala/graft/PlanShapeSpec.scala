@@ -161,6 +161,27 @@ class PlanShapeSpec extends AnyFunSuite {
       t.read().filter(col("u") === probe).count())
   }
 
+  test("MOR point read counts base and log files on both sides of its probe count") {
+    import org.apache.spark.sql.functions.lit
+    val t = new graft.operators.GraftTable(spark,
+      java.nio.file.Files.createTempDirectory("graft-morprobe").toString,
+      Seq("id"), tableType = graft.operators.GraftTable.MergeOnRead)
+    val sess = spark
+    import sess.implicits._
+    t.bulkInsert((0L until 100L).toDF("id")
+      .withColumn("v", lit("a")).withColumn("trx_seq", lit("001")))
+    t.upsert(Seq((7L, "b", "002")).toDF("id", "v", "trx_seq"))
+    val c = t.latestCommit().get
+    assert(c.files.size == 1 && c.logFiles.size == 1)
+    assert(t.readKeys(Seq(7L)).select("v").as[String].collect().toSeq == Seq("b"))
+    val (admitted, total) = t.lastPointRead.getOrElse(fail("no point read recorded"))
+    // the base file and the log both hold key 7: both are admitted, and
+    // the total counts them both too
+    assert(admitted <= total && total == 2, s"point read admitted $admitted/$total")
+    t.readKeyRange(7L, 7L)
+    assert(t.lastRangeRead.contains((2, 2)), s"range read ${t.lastRangeRead}")
+  }
+
   test("bootstrap scans keep user-column pushdown; only the derived key is residual") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
