@@ -617,8 +617,10 @@ class GraftTable(
     */
   private def scanFiles(files: Seq[DataFile],
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    // an empty LocalRelation has exact zero stats, so a join against it
+    // broadcasts or folds away; an empty RDD's default stats would shuffle
     if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      return spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
     val byCommitDir = files.groupBy(f => f.path.split("/").take(2).mkString("/"))
     byCommitDir.map { case (dir, fs) =>
       val paths = fs.map(f => s"$root/${f.path}")
@@ -1135,8 +1137,7 @@ class GraftTable(
             // a NULL record key would bucket to the hive null-partition
             // dir (which no string bucket set matches) and NPE here —
             // fail with a diagnosable message instead
-            require(!r.isNullAt(0),
-              "batch contains a NULL record key — record keys must be non-null")
+            require(!r.isNullAt(0), GraftTable.NullKeyMessage)
             r.getInt(0).toString
           }.toSet
         prev.files.partition(f =>
@@ -1189,8 +1190,7 @@ class GraftTable(
             val (ix, bl) = bc.value
             val local = new java.util.BitSet(bl.length)
             rows.foreach { r =>
-              require(!r.isNullAt(1),
-                "batch contains a NULL record key — record keys must be non-null")
+              require(!r.isNullAt(1), GraftTable.NullKeyMessage)
               val k = r.getUTF8String(1)
               ix.get(r.getUTF8String(0).toString).foreach { iv =>
                 lazy val h = graft.functions.KeyBloom.hash(k)
@@ -1240,8 +1240,7 @@ class GraftTable(
       .select(graft.functions.RangeBucket.bucketCol(col(Meta.RecordKey),
         boundaries.toSeq).as("bucket")).distinct()
       .collect().map { r =>
-        require(!r.isNullAt(0),
-          "batch contains a NULL record key — record keys must be non-null")
+        require(!r.isNullAt(0), GraftTable.NullKeyMessage)
         r.getInt(0)
       }
     // buckets empty at build time have no shard; keys bucketing there
@@ -1744,11 +1743,20 @@ class GraftTable(
     * (`col("o_totalprice") + col("src_delta")`). Helper source columns
     * not in the table schema are visible to expressions but never
     * persisted. Per the SQL/Delta MERGE rule, more than one source row
-    * per key is an error (checked). Only files whose key interval/bloom
-    * admits a source key are rewritten — the same [[pruneAffected]]
-    * planner as upsert, so MERGE write amplification is proportional to
-    * the source's key spread. Requires a globally-unique record key
-    * (global index) and a compacted table when MERGE_ON_READ.
+    * per key is an error, and so is a NULL key (both checked). Only
+    * files whose key interval/bloom admits a source key are rewritten —
+    * the same [[pruneAffected]] planner as upsert, so MERGE write
+    * amplification is proportional to the source's key spread. Requires
+    * a globally-unique record key (global index) and a compacted table
+    * when MERGE_ON_READ.
+    *
+    * Every source and clause set takes one plan: the affected target
+    * rows LEFT joined to the source, unioned (when inserting) with the
+    * source rows whose key no affected row holds (a left anti join).
+    * Spark chooses broadcast or shuffle for each join from exact source
+    * stats. The driver receives only the key check's one row, the
+    * planner's bitsets and what Spark broadcasts, which
+    * `spark.sql.autoBroadcastJoinThreshold` bounds — never the source.
     */
   def mergeInto(source0: DataFrame,
       whenMatchedSet: Map[String, Column] = Map.empty,
@@ -1838,63 +1846,39 @@ class GraftTable(
         case _ => col(f.name)
       }
     }.toIndexedSeq: _*)
-    // LOCAL fast path: a driver-assembled (IVM wave) source optimizes to
-    // a LocalRelation — re-evaluation is free, so the persist buys
-    // nothing, and the key-uniqueness check reads the relation's rows on
-    // the driver instead of scheduling a groupBy job. A KB-scale merge
-    // thus skips two fixed-cost cluster rounds (measured ~0.3–0.6 s of
-    // every IVM wave commit at sf0.1). A DISTRIBUTED source that turns
-    // out small (≤ SmallMergeSourceRows once materialized — IVM deltas,
-    // SQL MERGE batches) is CONVERTED to a LocalRelation: the one
-    // collect buys exact stats for the write plan, a broadcast-sized
-    // join side, and the same driver-side dup check; big sources skip
-    // the conversion and keep the persisted distributed plan.
-    def localRelOf(df: DataFrame) = df.queryExecution.optimizedPlan match {
+    // a driver-assembled source (an IVM wave) optimizes to a
+    // LocalRelation: re-evaluation is free and its stats are exact, so it
+    // is neither persisted nor grouped — the key check reads its rows on
+    // the driver. A distributed source is persisted, and the check's
+    // groupBy job fills the cache, so the join below plans on its exact
+    // cached size.
+    val srcLocalRel = srcUnpinned.queryExecution.optimizedPlan match {
       case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => Some(lr)
       case _ => None
     }
-    var srcLocalRel = localRelOf(srcUnpinned)
-    var persisted: Option[DataFrame] = None
     val src =
       if (srcLocalRel.isDefined) srcUnpinned
-      else {
-        val p = srcUnpinned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val nRows = p.count()
-        // byte-gated (round-21 verdict #3): cached actuals, read through a
-        // FRESH Dataset so the plan resolves through the cache (the
-        // original QueryExecution is fixed pre-persist)
-        val nBytes = {
-          val fresh = p.select(p.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
-          val s = fresh.queryExecution.optimizedPlan.stats.sizeInBytes
-          if (s.isValidLong) s.toLong else Long.MaxValue
-        }
-        GraftTable.lastMergeSourceConverted =
-          nRows <= GraftTable.SmallMergeSourceRows &&
-            nBytes <= GraftTable.SmallMergeSourceBytes
-        if (GraftTable.lastMergeSourceConverted) {
-          import scala.jdk.CollectionConverters._
-          val rows = p.collect()
-          p.unpersist(blocking = false)
-          val local = spark.createDataFrame(rows.toSeq.asJava, srcUnpinned.schema)
-          srcLocalRel = localRelOf(local)
-          local
-        } else { persisted = Some(p); p }
-      }
+      else srcUnpinned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
+      // one row per key, and no NULL key: a NULL key never matches, so it
+      // would land as a keyless insert that no later merge can reach
       srcLocalRel match {
         case Some(lr) =>
           val ki = lr.output.indexWhere(_.name == Meta.RecordKey)
-          val seen = new java.util.HashSet[Option[String]]()
+          val seen = new java.util.HashSet[String]()
           lr.data.foreach { r =>
-            val k = Option(r.getUTF8String(ki)).map(_.toString)
-            require(seen.add(k),
-              "mergeInto source has multiple rows for key " + k.getOrElse(""))
+            require(!r.isNullAt(ki), GraftTable.NullKeyMessage)
+            val k = r.getUTF8String(ki).toString
+            require(seen.add(k), "mergeInto source has multiple rows for key " + k)
           }
         case None =>
-          val dup = src.groupBy(col(Meta.RecordKey)).agg(count(lit(1)).as("c"))
-            .filter(col("c") > 1).limit(1).collect()
-          require(dup.isEmpty, "mergeInto source has multiple rows for key " +
-            dup.headOption.map(_.getString(0)).getOrElse(""))
+          src.groupBy(col(Meta.RecordKey)).agg(count(lit(1)).as("c"))
+            .filter(col("c") > 1 || col(Meta.RecordKey).isNull).limit(1).collect()
+            .foreach { r =>
+              require(!r.isNullAt(0), GraftTable.NullKeyMessage)
+              throw new IllegalArgumentException(
+                "mergeInto source has multiple rows for key " + r.getString(0))
+            }
       }
       // BY SOURCE clauses quantify over every target row, so pruning
       // would silently skip the files their keys never touch
@@ -1910,54 +1894,22 @@ class GraftTable(
       val srcPrefixed = src.columns.foldLeft(src.toDF())((d, c) =>
         if (c == Meta.RecordKey) d else d.withColumnRenamed(c, s"src_$c"))
         .withColumn("_s", lit(true))
-      // BROADCAST MERGE for local sources (round-22, guide §3.1): a FULL
-      // OUTER join cannot broadcast, so every KB-scale IVM/merge commit
-      // shuffled AND sorted the whole affected target side. With a
-      // LocalRelation source the three row classes split exactly:
-      //  - target rows (matched or carried) come from ONE broadcast LEFT
-      //    join — the target is scanned, never exchanged;
-      //  - source-only INSERT rows are computed on the driver from the
-      //    already-local source rows minus the matched keys (one
-      //    key-column-pruned broadcast semi-join job over the affected
-      //    files — parquet reads just the key column).
-      // BY SOURCE clauses quantify over every target row and keep the
-      // full-outer plan, as do distributed (non-converted) sources.
-      val j = srcLocalRel match {
-        case Some(_) if !hasBySource =>
-          val exJ = ex.join(broadcast(srcPrefixed), Seq(Meta.RecordKey), "left")
-          if (!insertWhenNotMatched) exJ
-          else {
-            val matchedKeys: java.util.HashSet[String] = {
-              val s = new java.util.HashSet[String]()
-              if (affected.nonEmpty)
-                ex.join(broadcast(src.select(col(Meta.RecordKey))),
-                    Seq(Meta.RecordKey), "left_semi")
-                  .select(col(Meta.RecordKey)).collect()
-                  .foreach(r => { s.add(r.getString(0)); () })
-              s
-            }
-            // collect() on a LocalRelation plan executes driver-side
-            val insertRows = src.collect().filter { r =>
-              val k = r.getAs[String](Meta.RecordKey)
-              k == null || !matchedKeys.contains(k)
-            }
-            val insertDf = {
-              import scala.jdk.CollectionConverters._
-              spark.createDataFrame(insertRows.toSeq.asJava, src.schema)
-            }
-            val pref = insertDf.columns.foldLeft(insertDf)((d, c) =>
-              if (c == Meta.RecordKey) d else d.withColumnRenamed(c, s"src_$c"))
-            val insertSide = pref.select(
-              Seq(col(Meta.RecordKey)) ++
-                tableCols.filterNot(_ == Meta.RecordKey).map(c =>
-                  lit(null).cast(activeSchema(c).dataType).as(c)) ++
-                Seq(lit(null).cast("boolean").as("_t")) ++
-                pref.columns.filterNot(_ == Meta.RecordKey).map(col) ++
-                Seq(lit(true).as("_s")): _*)
-            exJ.unionByName(insertSide)
-          }
-        case _ => ex.join(srcPrefixed, Seq(Meta.RecordKey), "full_outer")
-      }
+      // source keys are unique and non-NULL, so this union is exactly the
+      // full outer join; unlike a full outer join, each leg can broadcast
+      // its small side
+      val targetSide = ex.join(srcPrefixed, Seq(Meta.RecordKey), "left")
+      val j =
+        if (!insertWhenNotMatched) targetSide
+        else {
+          val newKeys = srcPrefixed.join(ex.select(col(Meta.RecordKey)),
+            Seq(Meta.RecordKey), "left_anti")
+          targetSide.unionByName(newKeys.select(
+            Seq(col(Meta.RecordKey)) ++
+              tableCols.filterNot(_ == Meta.RecordKey).map(c =>
+                lit(null).cast(activeSchema(c).dataType).as(c)) ++
+              Seq(lit(null).cast("boolean").as("_t")) ++
+              newKeys.columns.filterNot(_ == Meta.RecordKey).map(col): _*))
+        }
       val matched = col("_t").isNotNull && col("_s").isNotNull
       val bySource = col("_t").isNotNull && col("_s").isNull
       // a NULL delete/insert condition keeps/skips the row (SQL
@@ -3857,25 +3809,9 @@ object GraftTable {
     * write (the stats-balloon guard). */
   private[operators] val SaneEstimateFileCount = 64
 
-  /** A merge source converts to a LocalRelation (exact stats, broadcast
-    * join side, driver-side dup check) only when BOTH hold once
-    * materialized: at most this many rows AND at most
-    * [[SmallMergeSourceBytes]] cached bytes. The round-21 gate was
-    * row-count-only at 20k, which (a) let a wide-row source (MB-scale
-    * document text) collect multi-GB to the driver and (b) kept the
-    * ~35k-row narrow w_incr_join delta on the slow distributed path; the
-    * byte gate fixes both (round-21 verdict #3 + next #4/#8). */
-  private[operators] val SmallMergeSourceRows = 500000L
-
-  /** Byte half of the conversion gate: the source's materialized cache
-    * size must fit comfortably in the driver (the collect produces
-    * external rows, a few × this). */
-  private[operators] val SmallMergeSourceBytes = 64L * 1024 * 1024
-
-  /** Test observability: whether the LAST distributed merge source passed
-    * the conversion gate (rows AND bytes) — LocalRelation sources never
-    * set it. Driver-side under the table lock; volatile is enough. */
-  @volatile private[graft] var lastMergeSourceConverted = false
+  /** The refusal every keyed write gives a batch with a NULL record key. */
+  private[operators] val NullKeyMessage =
+    "batch contains a NULL record key — record keys must be non-null"
 
   /** Commit-store for a root, resolved exactly like the constructor
     * default: object-store CAS for mounted (space) roots, hard-link CAS

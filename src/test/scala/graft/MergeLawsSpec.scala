@@ -279,4 +279,105 @@ class MergeLawsSpec extends AnyFunSuite {
     mor.upsert(Seq((1L, "v15", "015", false)).toDF("id", "v", "trx_seq", Meta.Deleted))
     assert(snapshot(mor) == Map(1L -> "v15"))
   }
+
+  /** One MERGE INTO clause set, as `mergeInto` takes it. */
+  case class Clauses(name: String,
+      set: Map[String, org.apache.spark.sql.Column] = Map.empty,
+      matchedDelete: Option[org.apache.spark.sql.Column] = None,
+      matchedTouched: Option[org.apache.spark.sql.Column] = None,
+      insert: Boolean = true,
+      insertCond: Option[org.apache.spark.sql.Column] = None,
+      bySourceSet: Map[String, org.apache.spark.sql.Column] = Map.empty,
+      bySourceDelete: Option[org.apache.spark.sql.Column] = None,
+      bySourceTouched: Option[org.apache.spark.sql.Column] = None)
+
+  test("MERGE law: every source shape and clause set equals a full-outer evaluation") {
+    import org.apache.spark.sql.functions._
+    val clauseSets = Seq(
+      Clauses("SET claimed by a condition",
+        set = Map(
+          "v" -> when(col("src_sn") % 2 === 0, concat(col("v"), lit("+"), col("src_v")))
+            .otherwise(col("v")),
+          "n" -> when(col("src_sn") % 2 === 0, col("src_sn")).otherwise(col("n"))),
+        matchedTouched = Some(col("src_sn") % 2 === 0)),
+      Clauses("conditional DELETE", set = Map("v" -> col("src_v")),
+        matchedDelete = Some(col("src_sn") > 2)),
+      Clauses("no insert", set = Map("v" -> concat(col("v"), col("src_v"))), insert = false),
+      Clauses("gated insert", set = Map("n" -> col("src_sn")),
+        insertCond = Some(col("src_sn") > 1)),
+      Clauses("BY SOURCE set", set = Map("v" -> col("src_v")),
+        bySourceSet = Map("v" -> when(col("n") % 2 === 0, concat(col("v"), lit("-bs")))
+          .otherwise(col("v"))),
+        bySourceTouched = Some(col("n") % 2 === 0)),
+      Clauses("BY SOURCE delete", matchedDelete = Some(col("src_sn") === 0),
+        insertCond = Some(col("src_sn") =!= 3), bySourceDelete = Some(col("n") === 1)))
+    val rnd = new scala.util.Random(1009)
+    clauseSets.foreach { cl =>
+      val baseN = 40 + rnd.nextInt(80)
+      val lo = rnd.nextInt(baseN).toLong
+      val hi = lo + 10 + rnd.nextInt(50)
+      // the base holds the even keys; some keys carry a second commit's stamp
+      def build(): GraftTable = {
+        val t = new GraftTable(spark, Files.createTempDirectory("graft-law-merge").toString,
+          Seq("id"), targetFileBytes = 2 * 1024)
+        t.bulkInsert((0L until baseN by 2).map(i =>
+          (i, s"b$i", if (i % 10 == 4) None else Some(i % 6), "001"))
+          .toDF("id", "v", "n", "trx_seq"))
+        t.upsert((0L until baseN by 6).map(i => (i, s"u$i", Some(i % 6), "002"))
+          .toDF("id", "v", "n", "trx_seq"))
+        t
+      }
+      def sn(i: Long) = if (i % 7 == 0) None else Some(i % 5)
+      val ranged = spark.range(lo, hi).select(col("id"),
+        concat(lit("s"), col("id").cast("string")).as("v"),
+        when(col("id") % 7 =!= 0, col("id") % 5).as("sn"))
+      // past the broadcast threshold and the old 64 MB conversion gate
+      val padReps = (72L * 1024 * 1024 / (32 * (hi - lo))).toInt
+      val shapes = Seq(
+        "local" -> (lo until hi).map(i => (i, s"s$i", sn(i))).toDF("id", "v", "sn"),
+        "distributed" -> ranged,
+        "wide" -> ranged.withColumn("pad", repeat(md5(col("id").cast("string")), padReps)))
+      shapes.foreach { case (shape, source) =>
+        val t = build()
+        val seq = t.latestCommit().get.seq + 1
+        val tgt = t.read().select("id", "v", "n", Meta.CommitSeq).withColumn("_t", lit(true))
+        val srcP = source.select(Seq("id", "v", "sn").map(c => col(c).as(s"src_$c")): _*)
+          .withColumn("_s", lit(true))
+        val matched = col("_t").isNotNull && col("_s").isNotNull
+        val bySource = col("_t").isNotNull && col("_s").isNull
+        val inserted = col("_t").isNull
+        val dropped =
+          coalesce(matched && cl.matchedDelete.getOrElse(lit(false)), lit(false)) ||
+            coalesce(bySource && cl.bySourceDelete.getOrElse(lit(false)), lit(false)) ||
+            (inserted && !(lit(cl.insert) && coalesce(cl.insertCond.getOrElse(lit(true)), lit(false))))
+        val restamped = (matched && coalesce(cl.matchedTouched.getOrElse(lit(true)), lit(false))) ||
+          inserted ||
+          (bySource && lit(cl.bySourceSet.nonEmpty) &&
+            coalesce(cl.bySourceTouched.getOrElse(lit(true)), lit(false)))
+        def value(c: String, onInsert: org.apache.spark.sql.Column) =
+          when(matched, cl.set.getOrElse(c, col(c)))
+            .when(bySource, cl.bySourceSet.getOrElse(c, col(c)))
+            .otherwise(onInsert).as(c)
+        val expected = tgt.join(srcP, tgt("id") === srcP("src_id"), "full_outer")
+          .filter(!dropped)
+          .select(coalesce(col("id"), col("src_id")).as("id"),
+            value("v", col("src_v")), value("n", lit(null).cast("long")),
+            when(restamped, lit(seq)).otherwise(col(Meta.CommitSeq)).as("seq"))
+          .as[(Long, Option[String], Option[Long], Long)].collect().sortBy(_._1).toSeq
+        t.mergeInto(source,
+          whenMatchedSet = cl.set,
+          whenMatchedDelete = cl.matchedDelete,
+          whenMatchedTouched = cl.matchedTouched,
+          insertWhenNotMatched = cl.insert,
+          insertWhenNotMatchedCond = cl.insertCond,
+          whenNotMatchedBySourceSet = cl.bySourceSet,
+          whenNotMatchedBySourceDelete = cl.bySourceDelete,
+          whenNotMatchedBySourceTouched = cl.bySourceTouched)
+        val got = t.read().select(col("id"), col("v"), col("n"), col(Meta.CommitSeq).as("seq"))
+          .as[(Long, Option[String], Option[Long], Long)].collect().sortBy(_._1).toSeq
+        assert(got == expected,
+          s"${cl.name}, $shape source, base $baseN keys, source [$lo, $hi)")
+      }
+    }
+  }
 }

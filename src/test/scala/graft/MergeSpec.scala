@@ -655,45 +655,60 @@ class MergeSpec extends AnyFunSuite {
     assert(t.readUser().filter($"id" === 6L).select("v").as[String].head() == "m6")
   }
 
-  test("merge source conversion is byte-gated: wide rows stay distributed, narrow ones convert") {
-    // round-22 (verdict #3/#8): the LocalRelation conversion collects the
-    // source to the driver — a row-count-only gate let a ≤20k-row source
-    // with MB-scale text collect multi-GB. The gate is now rows AND
-    // cached bytes; and the row cap is high enough that the ~35k-row
-    // narrow IVM join delta (the w_incr_join fix, verdict #4) converts.
-    val t = mkTable(tmp())
+  test("a MERGE brings no source rows to the driver, wide or narrow") {
+    // the driver receives the key check's row, the planner's bitsets, the
+    // write's file stats and what Spark broadcasts; the broadcast threshold
+    // is set far below both sources, so neither may reach the driver.
+    // Large target files keep the write's range sketch and file stats small.
+    val t = new GraftTable(spark, tmp(), Seq("id"), targetFileBytes = 64L * 1024 * 1024)
     t.bulkInsert(Seq((1L, "a", "001", false), (2L, "b", "001", false))
       .toDF("id", "v", "trx_seq", Meta.Deleted))
-    // WIDE: 15k rows x ~6.4 KB of HIGH-ENTROPY text (md5 chain — the
-    // columnar cache cannot dictionary/RLE it away) ≈ 96 MB cached
-    // > SmallMergeSourceBytes → must keep the distributed plan
-    val chain = concat_ws("", (0 until 200).map(i =>
-      md5(concat(col("id").cast("string"), lit(s"_$i")))): _*)
-    val wide = spark.range(10L, 15010L).select(col("id"), chain.as("v"))
-    t.mergeInto(wide, insertWhenNotMatched = true)
-    assert(!GraftTable.lastMergeSourceConverted,
-      "a 15k-row wide (≈96 MB) source must NOT collect to the driver")
-    // NARROW: 35k rows x a few bytes — over the OLD 20k row cap, far
-    // under the byte cap → converts (exact stats, driver dup check)
-    val narrow = spark.range(20000L, 55000L).select(col("id"),
-      concat(lit("n"), col("id").cast("string")).as("v"))
-    t.mergeInto(narrow, insertWhenNotMatched = true)
-    assert(GraftTable.lastMergeSourceConverted,
-      "a 35k-row narrow source must take the LocalRelation fast path")
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(threshold)
+    spark.conf.set(threshold, 64 * 1024L)
+    try {
+      // WIDE: 15k rows x ~6.4 KB of HIGH-ENTROPY text (md5 chain) ≈ 96 MB
+      val chain = concat_ws("", (0 until 200).map(i =>
+        md5(concat(col("id").cast("string"), lit(s"_$i")))): _*)
+      val wide = spark.range(10L, 15010L).select(col("id"), chain.as("v"))
+      val (_, wideBytes) = budgetOf(t.mergeInto(wide, insertWhenNotMatched = true))
+      assert(wideBytes < DriverBytesBound,
+        s"the wide merge sent the driver $wideBytes result bytes")
+      // NARROW: 35k rows x a few bytes
+      val narrow = spark.range(20000L, 55000L).select(col("id"),
+        concat(lit("n"), col("id").cast("string")).as("v"))
+      val (_, narrowBytes) = budgetOf(t.mergeInto(narrow, insertWhenNotMatched = true))
+      assert(narrowBytes < DriverBytesBound,
+        s"the narrow merge sent the driver $narrowBytes result bytes")
+    } finally saved match {
+      case Some(v) => spark.conf.set(threshold, v)
+      case None => spark.conf.unset(threshold)
+    }
     // and the merge semantics are unchanged either way
     assert(t.readUser().count() == 2 + 15000 + 35000)
     assert(t.readUser().filter($"id" === 1L).select("v").as[String].head() == "a")
   }
 
-  /** Spark jobs that `body` runs, counted by a listener scoped to a job
-    * group. */
-  private def jobsIn(body: => Unit): Int = {
+  /** Task result bytes a MERGE above may send the driver: the write's
+    * file stats and the planner's bitsets, not its source rows. */
+  private val DriverBytesBound = 512 * 1024L
+
+  /** Spark jobs that `body` runs and the task result bytes they send the
+    * driver, counted by a listener scoped to a job group. */
+  private def budgetOf(body: => Unit): (Int, Long) = {
     val group = s"job-budget-${java.util.UUID.randomUUID()}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val bytes = new java.util.concurrent.atomic.AtomicLong()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
           jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          bytes.addAndGet(e.taskMetrics.resultSize)
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
@@ -704,8 +719,10 @@ class MergeSpec extends AnyFunSuite {
       org.apache.spark.TestListenerBus.drain(sc)
       sc.removeSparkListener(listener)
     }
-    jobs.get
+    (jobs.get, bytes.get)
   }
+
+  private def jobsIn(body: => Unit): Int = budgetOf(body)._1
 
   test("a small COW upsert into a multi-file table runs a fixed job budget") {
     // guards the upsert against a second pass creeping back in: one
@@ -726,6 +743,26 @@ class MergeSpec extends AnyFunSuite {
       .collect().toSet == Set("u5", "u1500", "new"))
     assert(t.readUser().count() == 2001)
     assert(jobs <= 7, s"upsert ran $jobs Spark jobs, over its budget of 7")
+  }
+
+  test("a small MERGE runs a fixed job budget") {
+    // a driver-built source with an update, a delete and an insert: the
+    // stab pass plans it, and the target LEFT joined to the source plus the
+    // anti-joined inserts merge it, with no collect of keys or rows
+    val t = new GraftTable(spark, tmp(), Seq("id"), targetFileBytes = 2 * 1024)
+    t.bulkInsert(spark.range(0L, 2000L).select(col("id"),
+      concat(lit("v"), col("id").cast("string")).as("v"),
+      lit("001").as("trx_seq"), lit(false).as(Meta.Deleted)))
+    assert(t.latestCommit().get.files.size >= 4, "the base must span several files")
+    val source = Seq((5L, "u5", false), (1500L, "gone", true), (5000L, "new", false))
+      .toDF("id", "v", "drop")
+    val jobs = jobsIn(t.mergeInto(source,
+      whenMatchedSet = Map("v" -> col("src_v")),
+      whenMatchedDelete = Some(col("src_drop"))))
+    assert(t.readUser().filter($"id".isin(5L, 1500L, 5000L)).select("v").as[String]
+      .collect().toSet == Set("u5", "new"))
+    assert(t.readUser().count() == 2000)
+    assert(jobs <= 9, s"merge ran $jobs Spark jobs, over its budget of 9")
   }
 
   test("a small MOR delta commit runs a fixed job budget") {

@@ -183,6 +183,32 @@ class WriteOpsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("multiple rows"))
   }
 
+  test("mergeInto refuses a NULL source key on an empty table and under BY SOURCE") {
+    // a STRING key column: a null value encodes to a NULL record key, which
+    // no later merge could match — every plan must refuse it up front
+    def nullKeyRefused(body: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains("NULL record key"), s"got: ${e.getMessage}")
+    }
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("k STRING, v STRING")
+    val empty = new GraftTable(spark, tmp(), Seq("k"), targetFileBytes = 16 * 1024)
+    empty.createEmpty(schema)
+    nullKeyRefused(empty.mergeInto(Seq(("a", "x"), (null, "y")).toDF("k", "v")))
+    // two NULL keys are a NULL key first, not a duplicate of ""
+    nullKeyRefused(empty.mergeInto(Seq((null, "x"), (null, "y")).toDF("k", "v")))
+    // a distributed source takes the groupBy check
+    nullKeyRefused(empty.mergeInto(spark.range(3).select(
+      when(col("id") =!= 1, col("id").cast("string")).as("k"), lit("d").as("v"))))
+    assert(empty.readUser().count() == 0)
+    val t = new GraftTable(spark, tmp(), Seq("k"), targetFileBytes = 16 * 1024)
+    t.bulkInsert(Seq(("a", "1"), ("b", "2")).toDF("k", "v"))
+    nullKeyRefused(t.mergeInto(Seq(("a", "x"), (null, "y")).toDF("k", "v"),
+      whenMatchedSet = Map("v" -> col("src_v")),
+      whenNotMatchedBySourceDelete = Some(lit(true))))
+    assert(t.readUser().select("k", "v").as[(String, String)].collect().toSet ==
+      Set(("a", "1"), ("b", "2")))
+  }
+
   test("mergeInto with insertWhenNotMatched=false drops source-only rows") {
     val t = new GraftTable(spark, tmp(), Seq("id"), targetFileBytes = 16 * 1024)
     t.bulkInsert(rows(10).drop("p"))

@@ -67,38 +67,45 @@ def quartiles(xs):
     return q1, q2, q3
 
 
+HEADER = (f"{'metric':<20} {'parent q1/med/q3':>26} {'change q1/med/q3':>26} "
+          f"{'IQR(p)':>9} {'d_med':>7} {'wins':>6} {'spread p/c':>11}  verdict")
+
+
+def compare(name, got, lower, bound):
+    """One summary line for a metric's (parent, change) pairs."""
+    pq, cq = quartiles([a for a, _ in got]), quartiles([b for _, b in got])
+    iqr = pq[2] - pq[0]
+    wins = sum((b < a) if lower else (b > a) for a, b in got)
+    delta = (cq[1] - pq[1]) / pq[1] if pq[1] else 0.0
+    spread = [(q[2] - q[0]) / q[1] if q[1] else 0.0 for q in (pq, cq)]
+    worse = delta if lower else -delta
+    # every change run better than every parent run
+    separated = (max(b for _, b in got) < min(a for a, _ in got)) if lower else \
+        (min(b for _, b in got) > max(a for a, _ in got))
+    if wins * 10 >= 9 * len(got) and worse < 0 and abs(cq[1] - pq[1]) > iqr:
+        verdict = "gain"
+    elif worse > bound:
+        verdict = "REGRESSED"
+    elif max(spread) > bound and not separated:
+        verdict = "unresolved (spread)"
+    else:
+        verdict = "within bound"
+    fmt = lambda q: f"{q[0]:.3f}/{q[1]:.3f}/{q[2]:.3f}"
+    return (f"{name:<20} {fmt(pq):>26} {fmt(cq):>26} {iqr:>9.3f} {delta:>+7.1%} "
+            f"{wins:>3}/{len(got):<2} {spread[0]:>5.2f}/{spread[1]:<5.2f}  {verdict}")
+
+
 def summarise(workload, pairs, spec):
     print(f"\n== {workload}: {len(pairs)} pairs; runs correct: parent "
           f"{sum(p['correct'] for p, _ in pairs)}, change {sum(c['correct'] for _, c in pairs)}")
-    print(f"{'metric':<20} {'parent q1/med/q3':>26} {'change q1/med/q3':>26} "
-          f"{'IQR(p)':>9} {'d_med':>7} {'wins':>6} {'spread p/c':>11}  verdict")
+    print(HEADER)
     for m in spec["end_to_end"]:
-        name, lower = m["name"], m["better"] == "lower"
+        name = m["name"]
         got = [(p["metrics"].get(name, {}).get("value"), c["metrics"].get(name, {}).get("value"))
                for p, c in pairs]
         got = [(a, b) for a, b in got if a is not None and b is not None]
-        if not got:
-            continue
-        pq, cq = quartiles([a for a, _ in got]), quartiles([b for _, b in got])
-        iqr = pq[2] - pq[0]
-        wins = sum((b < a) if lower else (b > a) for a, b in got)
-        delta = (cq[1] - pq[1]) / pq[1] if pq[1] else 0.0
-        spread = [(q[2] - q[0]) / q[1] if q[1] else 0.0 for q in (pq, cq)]
-        worse = delta if lower else -delta
-        # every change run better than every parent run
-        separated = (max(b for _, b in got) < min(a for a, _ in got)) if lower else \
-            (min(b for _, b in got) > max(a for a, _ in got))
-        if wins * 10 >= 9 * len(got) and worse < 0 and abs(cq[1] - pq[1]) > iqr:
-            verdict = "gain"
-        elif worse > m["bound"]:
-            verdict = "REGRESSED"
-        elif max(spread) > m["bound"] and not separated:
-            verdict = "unresolved (spread)"
-        else:
-            verdict = "within bound"
-        fmt = lambda q: f"{q[0]:.3f}/{q[1]:.3f}/{q[2]:.3f}"
-        print(f"{name:<20} {fmt(pq):>26} {fmt(cq):>26} {iqr:>9.3f} {delta:>+7.1%} "
-              f"{wins:>3}/{len(got):<2} {spread[0]:>5.2f}/{spread[1]:<5.2f}  {verdict}")
+        if got:
+            print(compare(name, got, m["better"] == "lower", m["bound"]))
 
 
 def main():
